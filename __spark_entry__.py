@@ -1250,18 +1250,18 @@ def q_subword_pack(spark, sf_dir):
 
 
 def q_mosaic_fill(spark, sf_dir):
-    """Mosaic-scale depression filling (r8): block-Jacobi with exact
-    per-tile Priority-Flood solves — round 1 treats every interior
-    seam as an impassable-high wall, each round cogroups the tiles
-    with the current perimeter W strips and reruns the UNCHANGED fill
-    kernel on the halo-augmented grid, and the monotone-decreasing
-    iteration converges to the greatest fixpoint = the whole-mosaic
+    """Mosaic-scale depression filling (r8) as one border solve: a
+    profile cogroup emits each tile's border-band minimax
+    dendrogram, ONE bounded task runs minimax-Dijkstra from the mosaic
+    drain over all of them and writes the converged perimeter W
+    strips, and a final cogroup reruns the UNCHANGED Priority-Flood
+    fill kernel on each W-ringed halo-augmented grid — the whole-mosaic
     fill (bowls deliberately straddle both seams of the crater gate
     mosaic: a cross-seam depression's spill lives in ANOTHER tile, the
     case per-tile fill provably gets wrong —
-    test_mosaic_fill_plain_and_per_tile_divergence). Convergence is an
-    order-free bit_xor checksum over the perimeter strips (never a
-    driver collect). The oracle re-verifies the golden surface against
+    test_mosaic_fill_plain_and_per_tile_divergence). The block-Jacobi
+    halo iteration it replaced stays as a test twin, its converged
+    strips pinned equal. The oracle re-verifies the golden surface against
     the fixpoint equations recomputed from the raw crater_mosaic_cells
     table at GLOBAL coordinates; the golden itself is the scalar-heapq
     flood on the assembled grid cross-asserted vs the numpy
@@ -1277,7 +1277,7 @@ def q_mosaic_routed_flow(spark, sf_dir):
     """Whole-mosaic CONDITIONED drainage (r8): fill + flat routing +
     accumulation, all seam-correct — the capstone composition of the
     hydrology tier. Three perimeter-sized halo exchanges: the
-    mosaic_fill W iteration, a flat-distance (q-strip) iteration whose
+    mosaic_fill single border solve, a flat-distance (q-strip) iteration whose
     min-plus relaxation converges monotonically from +inf to the
     global BFS fixpoint, and the unchanged drainage decomposition on
     the ROUTED graph (flat edges are functional like strict edges; a

@@ -229,7 +229,8 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
     ADC stage's Arrow transfer). LUT construction and the gather+sum
     are byte-for-byte the adc_udf body, keyed by id instead of by
     vector bytes — two rows with the same q_id see the same LUT, so
-    scores are bit-identical to the qvec-carrying form."""
+    scores are bit-identical to the qvec-carrying form (pinned in
+    tests/test_ann_model.py)."""
     books = np.ascontiguousarray(books, dtype=np.float64)
     m, _ksub, dsub = books.shape
     qarr = {k: np.asarray(v, dtype=np.float64) for k, v in qmap.items()}
@@ -244,11 +245,12 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
         marange = np.arange(m)
         for key in pd.unique(ids):
             sel = np.flatnonzero(ids == key)
-            # same normalization arithmetic as adc_udf's batch form:
-            # np.linalg.norm over one contiguous row reduces pairwise
-            # exactly like the axis=1 matrix form — bit-identical
-            qi = qarr[key].copy()
-            qi /= np.maximum(np.linalg.norm(qi), 1e-12)
+            # adc_udf's matrix-form normalization, over a one-row
+            # matrix: the 1-D np.linalg.norm is a BLAS dot, whose
+            # summation order differs in the last bit on many vectors
+            qi = qarr[key][None, :].copy()
+            qi /= np.maximum(np.linalg.norm(qi, axis=1, keepdims=True), 1e-12)
+            qi = qi[0]
             lut = np.stack([
                 (books[j] * qi[j * dsub : (j + 1) * dsub][None, :]).sum(axis=1)
                 for j in range(m)

@@ -71,6 +71,8 @@ and a multi-tile river.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 
@@ -80,14 +82,6 @@ from ..kernels import codecs
 from .terrain import D8_NEIGHBORS, d8_grid
 
 NOVALUE = int(codecs.NOVALUE)
-
-#: strip sides -> (dlat, dlon) of the SENDER relative to the receiver.
-#: Receiver aug-grid placement is in _assemble_aug. Row 0 = north:
-#: the north neighbor has lat+1.
-_SIDES = {
-    "n": (1, 0), "s": (-1, 0), "w": (0, -1), "e": (0, 1),
-    "nw": (1, -1), "ne": (1, 1), "sw": (-1, -1), "se": (-1, 1),
-}
 
 STRIP_SCHEMA = "image_id string, side string, pos int, pos2 int, val long"
 BORDER_SCHEMA = (
@@ -112,13 +106,31 @@ LEN_CELLS_SCHEMA = "gx long, gy long, steps long, n_card long, n_diag long"
 # would need two billion cells in ONE path — beyond any planet mosaic.
 _PACK = np.int64(1) << np.int64(32)
 
+#: solved rows routed back to their owner tile by _solved_strips:
+#: (solve kind, strip side, value column[, low 32-bit column])
+_DELTAS = ("d", "d", "v")
+_OUTLETS = ("t", "t", "bx", "by")
+_EDGE_LENGTHS = ("t", "u", "s", "c")
 
-def _unpack_map(rows: pd.DataFrame, w: int):
-    """side='t'/'u' strip rows -> (sorted local src key, hi, lo)."""
+_DTYPES = {"string": object, "int": np.int32, "long": np.int64}
+
+
+def _empty(schema: str) -> pd.DataFrame:
+    """Zero-row frame with the columns and dtypes of a DDL schema."""
+    cols = (c.split() for c in schema.split(","))
+    return pd.DataFrame({n: pd.Series([], dtype=_DTYPES[t]) for n, t in cols})
+
+
+def _lookup_map(rows: pd.DataFrame, w: int, ys: np.ndarray, xs: np.ndarray):
+    """side='t'/'u' strip rows (keyed by local src ly/lx) looked up at
+    the local cells (ys, xs) -> (found, hi, lo) per cell; hi/lo are
+    the two packed halves, meaningful where found."""
     src = rows["pos"].to_numpy(np.int64) * w + rows["pos2"].to_numpy(np.int64)
-    val = rows["val"].to_numpy(np.int64)
     order = np.argsort(src, kind="stable")
-    return src[order], (val >> np.int64(32))[order], (val & np.int64(0xFFFFFFFF))[order]
+    src, val = src[order], rows["val"].to_numpy(np.int64)[order]
+    key = ys.astype(np.int64) * w + xs
+    pos = np.clip(np.searchsorted(src, key), 0, len(src) - 1)
+    return src[pos] == key, val[pos] >> np.int64(32), val[pos] & np.int64(0xFFFFFFFF)
 
 
 def parse_tile_id(image_id: str) -> tuple[int, int, str]:
@@ -141,6 +153,167 @@ def cell_gx(lon: int, x: int, w: int) -> int:
 
 def cell_gy(lat: int, y: int, h: int) -> int:
     return (89 - lat) * (h - 1) + y
+
+
+# ---------------------------------------------------------- shared helpers
+
+class _Tile(NamedTuple):
+    """One decoded tile inside a cogroup body."""
+
+    img: str
+    lat: int
+    lon: int
+    k: str
+    grid: np.ndarray
+    gx0: int  # global coords of local (0, 0)
+    gy0: int
+
+    @classmethod
+    def decode(cls, tile_pdf: pd.DataFrame) -> "_Tile":
+        img = tile_pdf["image_id"].iloc[0]
+        lat, lon, k = parse_tile_id(img)
+        (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
+        h, w = grid.shape
+        return cls(img, lat, lon, k, grid, cell_gx(lon, 0, w), cell_gy(lat, 0, h))
+
+    def cells(self, ys: np.ndarray, xs: np.ndarray, **cols) -> pd.DataFrame:
+        """Per-cell rows: global gx, gy of local (ys, xs), then cols."""
+        return pd.DataFrame({
+            "gx": self.gx0 + xs.astype(np.int64),
+            "gy": self.gy0 + ys.astype(np.int64),
+            **cols,
+        })
+
+
+def _receivers(h: int, w: int):
+    """The 8 halo receivers of an (h, w) tile, in emission order:
+    (side the strip fills on the RECEIVER's ring, receiver dlat, dlon,
+    sender rows, sender columns, slot position along that side).
+
+    With the shared-border convention the strip a neighbor's halo
+    needs is the SECOND row/column in from the shared edge: row 0 is
+    the north edge, so the north neighbor (lat+1) gets our row 1 as
+    ITS south halo, the south neighbor (lat-1) gets our row h-2, the
+    west neighbor our column 1, the east our column w-2; corners are
+    the single matching interior-corner cell."""
+    col, row, slot0 = np.arange(w), np.arange(h), np.zeros(1, np.int64)
+    return (
+        ("s", 1, 0, np.full(w, 1), col, col),        # to north nbr
+        ("n", -1, 0, np.full(w, h - 2), col, col),   # to south nbr
+        ("e", 0, -1, row, np.full(h, 1), row),       # to west nbr
+        ("w", 0, 1, row, np.full(h, w - 2), row),    # to east nbr
+        ("se", 1, -1, np.array([1]), np.array([1]), slot0),
+        ("sw", 1, 1, np.array([1]), np.array([w - 2]), slot0),
+        ("ne", -1, -1, np.array([h - 2]), np.array([1]), slot0),
+        ("nw", -1, 1, np.array([h - 2]), np.array([w - 2]), slot0),
+    )
+
+
+def _halo_rows(img: str, plane: np.ndarray, prefix: str = "") -> pd.DataFrame:
+    """One tile's (h, w) value plane -> its 8 outgoing STRIP_SCHEMA
+    strips, addressed to the neighbors, sides prefixed with `prefix`."""
+    lat, lon, k = parse_tile_id(img)
+    return pd.concat([pd.DataFrame({
+        "image_id": tile_id(lat + dlat, lon + dlon, k),
+        "side": prefix + side,
+        "pos": pos.astype(np.int32),
+        "pos2": np.zeros(len(pos), dtype=np.int32),
+        "val": np.asarray(plane[ys, xs], dtype=np.int64),
+    }) for side, dlat, dlon, ys, xs, pos in _receivers(*plane.shape)],
+        ignore_index=True)
+
+
+_RING_SIDES = ("n", "s", "w", "e", "nw", "ne", "sw", "se")
+
+
+def _place_ring(plane: np.ndarray, strips: pd.DataFrame, prefix: str = ""):
+    """Write every `prefix`-ed ring strip into the ring of an aug-frame
+    (h+2, w+2) plane, in place. Other sides (weight deltas, solved
+    edge maps, the other prefix's ring) are ignored."""
+    h, w = plane.shape[0] - 2, plane.shape[1] - 2
+    for side, g in strips.groupby("side"):
+        base = side[len(prefix):]
+        if not side.startswith(prefix) or base not in _RING_SIDES:
+            continue
+        # an n/s letter pins the row, a w/e letter the column; an edge
+        # side's free coordinate runs along it (a corner pins both)
+        along = 1 + g["pos"].to_numpy()
+        y = {"n": 0, "s": h + 1}.get(base[0], along)
+        x = {"w": 0, "e": w + 1}.get(base[-1], along)
+        plane[np.atleast_1d(y), np.atleast_1d(x)] = g["val"].to_numpy(np.int64)
+
+
+def _kahn(succ: np.ndarray, acc: np.ndarray, what: str) -> list:
+    """Forward worklist Kahn over a functional graph (succ[i] = node
+    i's one successor, -1 at terminals): adds every node's final acc
+    into its successor, in place, one vectorized round per level.
+    Returns the rounds' frontiers, upstream first, for reverse chains."""
+    indeg = np.zeros(len(succ), dtype=np.int64)
+    np.add.at(indeg, succ[succ >= 0], 1)
+    rounds = []
+    frontier = np.flatnonzero(indeg == 0)
+    n_done = 0
+    while frontier.size:
+        rounds.append(frontier)
+        n_done += frontier.size
+        fs = succ[frontier]
+        has = fs >= 0
+        tgt = fs[has]
+        if tgt.size == 0:
+            break
+        order = np.argsort(tgt, kind="stable")
+        st = tgt[order]
+        sa = acc[frontier][has][order]
+        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
+        uniq = st[cuts]
+        acc[uniq] += np.add.reduceat(sa, cuts)
+        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
+        frontier = uniq[indeg[uniq] == 0]
+    assert n_done == len(succ), f"{what} must be acyclic"
+    return rounds
+
+
+def _owned_graph(ys, xs, t_ys, t_xs, live, h: int, w: int,
+                 weights: np.ndarray | None, what: str):
+    """The owned-box tail both per-tile kernels share: owned cells
+    (ys, xs) with their target coords (t_ys, t_xs; own coords where
+    `live` is False) -> the mosaic_tile_arrays 10-tuple. Links in-box
+    targets, marks cross cells, accumulates (worklist Kahn) and chains
+    terminals and path splits back down the Kahn rounds."""
+    n = len(ys)
+    lookup = np.full(h * w, -1, dtype=np.int64)
+    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
+    in_box = (
+        live
+        & (t_xs >= 0) & (t_xs < w - 1)
+        & (t_ys >= 0) & (t_ys < h - 1)
+    )
+    t = np.full(n, -1, dtype=np.int64)
+    t[in_box] = lookup[t_ys[in_box] * w + t_xs[in_box]]
+    # t == -1 now means terminal: pit/flat (no target), dead in-box
+    # target (owned but mosaic-invalid), or out-of-box target (cross)
+    cross = live & ~in_box
+
+    if weights is None:
+        acc = np.ones(n, dtype=np.int64)
+    else:
+        acc = weights[ys, xs].astype(np.int64).copy()
+    rounds = _kahn(t, acc, what)
+
+    term = np.arange(n, dtype=np.int64)
+    steps = np.zeros(n, dtype=np.int64)
+    ncard = np.zeros(n, dtype=np.int64)
+    # step cell->target is cardinal iff the target shares a row or
+    # column (meaningful only where t >= 0)
+    is_card = ((t_xs == xs) | (t_ys == ys)).astype(np.int64)
+    for frontier in reversed(rounds):
+        ft = t[frontier]
+        has_t = ft >= 0
+        idx = frontier[has_t]
+        term[idx] = term[ft[has_t]]
+        steps[idx] = steps[ft[has_t]] + 1
+        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
+    return ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, t
 
 
 # ------------------------------------------------------------------ kernel
@@ -190,68 +363,14 @@ def mosaic_tile_arrays_py(aug: np.ndarray, weights: np.ndarray | None = None):
     xs = xs - 1  # tile coords (aug pads one ring on every side)
     own = (xs < w - 1) & (ys < h - 1)
     ys, xs, d8 = ys[own], xs[own], d8[own]
-    n = len(ys)
-
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
     t_xs = xs.astype(np.int64).copy()
     t_ys = ys.astype(np.int64).copy()
     for c, dx, dy, _card in D8_NEIGHBORS:
         sel = d8 == c
         t_xs[sel] += dx
         t_ys[sel] += dy
-    in_box = (
-        (d8 > 0)
-        & (t_xs >= 0) & (t_xs < w - 1)
-        & (t_ys >= 0) & (t_ys < h - 1)
-    )
-    t = np.full(n, -1, dtype=np.int64)
-    t[in_box] = lookup[t_ys[in_box] * w + t_xs[in_box]]
-    # t == -1 now means terminal: pit/flat (d8 = 0), dead in-box target
-    # (owned but mosaic-invalid), or out-of-box target (cross candidate)
-    cross = (d8 > 0) & ~in_box
-
-    if weights is None:
-        acc = np.ones(n, dtype=np.int64)
-    else:
-        acc = weights[ys, xs].astype(np.int64).copy()
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "mosaic D8 graph must be acyclic (strict descent)"
-
-    term = np.arange(n, dtype=np.int64)
-    steps = np.zeros(n, dtype=np.int64)
-    ncard = np.zeros(n, dtype=np.int64)
-    # step cell->target is cardinal iff the target shares a row or
-    # column (meaningful only where t >= 0)
-    is_card = ((t_xs == xs) | (t_ys == ys)).astype(np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        idx = frontier[has_t]
-        term[idx] = term[ft[has_t]]
-        steps[idx] = steps[ft[has_t]] + 1
-        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
-    return ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, t
+    return _owned_graph(ys, xs, t_ys, t_xs, d8 > 0, h, w, weights,
+                        "mosaic D8 graph (strict descent)")
 
 
 def _assemble_aug(grid: np.ndarray, strips: pd.DataFrame) -> np.ndarray:
@@ -260,121 +379,120 @@ def _assemble_aug(grid: np.ndarray, strips: pd.DataFrame) -> np.ndarray:
     h, w = grid.shape
     aug = np.full((h + 2, w + 2), NOVALUE, dtype=np.int64)
     aug[1 : h + 1, 1 : w + 1] = grid.astype(np.int64)
-    for side, g in strips.groupby("side"):
-        # skip weight deltas / solved edge maps / flat-distance rings
-        if side in ("d", "t", "u") or side.startswith("q"):
-            continue
-        pos = g["pos"].to_numpy()
-        val = g["val"].to_numpy()
-        if side == "n":
-            aug[0, 1 + pos] = val
-        elif side == "s":
-            aug[h + 1, 1 + pos] = val
-        elif side == "w":
-            aug[1 + pos, 0] = val
-        elif side == "e":
-            aug[1 + pos, w + 1] = val
-        elif side == "nw":
-            aug[0, 0] = val[0]
-        elif side == "ne":
-            aug[0, w + 1] = val[0]
-        elif side == "sw":
-            aug[h + 1, 0] = val[0]
-        elif side == "se":
-            aug[h + 1, w + 1] = val[0]
+    _place_ring(aug, strips)
     return aug
 
 
+def _d8_arrays(grid: np.ndarray, strips: pd.DataFrame,
+               weights: np.ndarray | None = None):
+    """Strict-descent mosaic kernel over the halo-augmented grid."""
+    return mosaic_tile_arrays(_assemble_aug(grid, strips), weights)
+
+
 # ------------------------------------------------------------ spark stages
+#
+# Every driver composes the same few stages: halo strips out of each
+# tile (halo_strips), a cogroup of the tiles with the strips addressed
+# to them (_cogroup), a bounded ONE-task solve (_one_task), and solved
+# rows routed back to their owner tile in the strip frame
+# (_solved_strips). _drainage chains them into the Barnes shape the
+# drainage drivers share.
+
+def _cogroup(tiles: DataFrame, strips: DataFrame, body, schema: str,
+             *args) -> DataFrame:
+    """Cogroup every tile with the strips addressed to it and run
+    body(_Tile, strips, *args) once per tile -> `schema` rows. Strips
+    addressed past the mosaic edge group with no tile and yield none."""
+    def run(tile_pdf: pd.DataFrame, strip_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(tile_pdf) == 0:
+            return _empty(schema)
+        return body(_Tile.decode(tile_pdf), strip_pdf, *args)
+
+    return (
+        tiles.groupby("image_id")
+        .cogroup(strips.groupby("image_id"))
+        .applyInPandas(run, schema=schema)
+    )
+
+
+def _one_task(df: DataFrame, solve, schema: str) -> DataFrame:
+    """Every row of `df` into ONE executor task running solve(pdf) —
+    the bounded single-node solve of the Barnes decomposition."""
+    return df.groupBy(F.lit(0).alias("_g")).applyInPandas(
+        lambda _k, pdf: solve(pdf), schema=schema
+    )
+
+
+def _solved_strips(solved: DataFrame, kind: str, side: str, hi: str,
+                   lo: str | None = None) -> DataFrame:
+    """The `kind` rows of a SOLVE_SCHEMA frame, addressed back to their
+    owner tile in the strip frame as `side` rows at pos/pos2 = ly/lx.
+    val is column `hi`, or hi<<32 | lo when `lo` is given."""
+    val = F.col(hi) if lo is None else F.col(hi) * F.lit(int(_PACK)) + F.col(lo)
+    return solved.filter(F.col("kind") == kind).select(
+        F.col("img").alias("image_id"),
+        F.lit(side).alias("side"),
+        F.col("ly").alias("pos"),
+        F.col("lx").alias("pos2"),
+        val.alias("val"),
+    )
+
+
+def _scope():
+    """The mosaic cache scope, with the previous call's perimeter
+    caches dropped."""
+    from ..cache import scope
+
+    sc = scope("mosaic")
+    sc.release()
+    return sc
+
+
+def _drainage(tiles: DataFrame, strips: DataFrame, sc, kernel, back,
+              body, schema: str, *args) -> DataFrame:
+    """The Barnes shape every drainage driver shares, over the cached
+    ring `strips`: border cogroup (kernel's unweighted local pass) ->
+    ONE-task border solve -> each _solved_strips route in `back` rides
+    the strip frame back to its owner tile -> final cogroup
+    body(tile, strips, kernel, *args). The solve is cached (in `sc`)
+    only when more than one route reads it."""
+    border = _cogroup(tiles, strips, _border_pass, BORDER_SCHEMA, kernel)
+    solved = _one_task(border, solve_border_graph, SOLVE_SCHEMA)
+    if len(back) > 1:
+        solved = sc.hold(solved.cache())
+    for route in back:
+        strips = strips.unionByName(_solved_strips(solved, *route))
+    return _cogroup(tiles, strips, body, schema, kernel, *args)
+
 
 def halo_strips(tiles: DataFrame) -> DataFrame:
     """Every tile -> 8 perimeter strips addressed to its neighbors
-    (STRIP_SCHEMA rows; the raster itself never leaves the task).
-    With the shared-border convention the strip a neighbor's halo
-    needs is the SECOND row/column in from the shared edge: row 0 is
-    the north edge, so the north neighbor (lat+1) gets our row 1 as
-    ITS south halo, the south neighbor (lat-1) gets our row h-2, the
-    west neighbor our column 1, the east our column w-2; corners are
-    the single matching interior-corner cell."""
+    (STRIP_SCHEMA rows; the raster itself never leaves the task). The
+    strip geometry is _receivers'."""
     from typing import Iterator
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                lat, lon, k = parse_tile_id(img)
-                h, w = grid.shape
-                g = grid.astype(np.int64)
-                # (receiver side, receiver dlat/dlon, payload, pos axis)
-                emits = (
-                    ("s", 1, 0, g[1, :], np.arange(w)),       # to north nbr
-                    ("n", -1, 0, g[h - 2, :], np.arange(w)),  # to south nbr
-                    ("e", 0, -1, g[:, 1], np.arange(h)),      # to west nbr
-                    ("w", 0, 1, g[:, w - 2], np.arange(h)),   # to east nbr
-                    ("se", 1, -1, g[1:2, 1], np.zeros(1, np.int64)),
-                    ("sw", 1, 1, g[1:2, w - 2], np.zeros(1, np.int64)),
-                    ("ne", -1, -1, g[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-                    ("nw", -1, 1, g[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-                )
-                for side, dlat, dlon, vals, pos in emits:
-                    out.append(pd.DataFrame({
-                        "image_id": tile_id(lat + dlat, lon + dlon, k),
-                        "side": side,
-                        "pos": pos.astype(np.int32),
-                        "pos2": np.zeros(len(pos), dtype=np.int32),
-                        "val": np.asarray(vals, dtype=np.int64),
-                    }))
-            yield pd.concat(out, ignore_index=True) if out else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "side": pd.Series([], dtype=object),
-                "pos": pd.Series([], dtype=np.int32),
-                "pos2": pd.Series([], dtype=np.int32),
-                "val": pd.Series([], dtype=np.int64),
-            })
+            out = [_halo_rows(img, grid)
+                   for img, grid in codecs.iter_decoded_tiles(pdf)]
+            yield pd.concat(out, ignore_index=True) if out else _empty(STRIP_SCHEMA)
 
     return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
         gen, schema=STRIP_SCHEMA
     )
 
 
-def _empty_border() -> pd.DataFrame:
-    return pd.DataFrame({
-        "kind": pd.Series([], dtype=object),
-        "img": pd.Series([], dtype=object),
-        "ax": pd.Series([], dtype=np.int64),
-        "ay": pd.Series([], dtype=np.int64),
-        "bx": pd.Series([], dtype=np.int64),
-        "by": pd.Series([], dtype=np.int64),
-        "lx": pd.Series([], dtype=np.int32),
-        "ly": pd.Series([], dtype=np.int32),
-        "v": pd.Series([], dtype=np.int64),
-        "s": pd.Series([], dtype=np.int64),
-        "c": pd.Series([], dtype=np.int64),
-    })
-
-
-def _border_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame,
-                 kernel=None) -> pd.DataFrame:
+def _border_pass(tile: _Tile, strips: pd.DataFrame, kernel) -> pd.DataFrame:
     """Stage-2 cogroup body: unweighted local pass -> BORDER_SCHEMA
     rows (exit edges kind='x', entry registry kind='e'). Entry rows
     carry the entry cell's LOCAL path split (s=steps, c=cardinal steps
     to its local terminal) so the border solve can also chain
     whole-mosaic flow-path lengths; exit rows leave s/c at 0 (the
     edge's own cardinality is derivable from its global endpoints)."""
-    if len(tile_pdf) == 0:
-        return _empty_border()
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    if kernel is None:
-        aug = _assemble_aug(grid, strips)
-        arrays = mosaic_tile_arrays(aug)
-    else:
-        arrays = kernel(grid, strips)
-    ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, _t = arrays
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    img, gx0, gy0 = tile.img, tile.gx0, tile.gy0
+    h, w = tile.grid.shape
+    ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, _t = kernel(
+        tile.grid, strips)
     out = []
     xi = np.flatnonzero(cross)  # exit-edge sources (terminals by def.)
     if xi.size:
@@ -407,7 +525,7 @@ def _border_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame,
             "s": steps[ring],
             "c": ncard[ring],
         }))
-    return pd.concat(out, ignore_index=True) if out else _empty_border()
+    return pd.concat(out, ignore_index=True) if out else _empty(BORDER_SCHEMA)
 
 
 def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
@@ -422,21 +540,8 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     Pure pandas/numpy — runs as ONE executor task."""
     ex = border[border["kind"] == "x"].reset_index(drop=True)
     en = border[border["kind"] == "e"].reset_index(drop=True)
-    empty = pd.DataFrame({
-        "kind": pd.Series([], dtype=object),
-        "img": pd.Series([], dtype=object),
-        "lx": pd.Series([], dtype=np.int32),
-        "ly": pd.Series([], dtype=np.int32),
-        "ax": pd.Series([], dtype=np.int64),
-        "ay": pd.Series([], dtype=np.int64),
-        "bx": pd.Series([], dtype=np.int64),
-        "by": pd.Series([], dtype=np.int64),
-        "v": pd.Series([], dtype=np.int64),
-        "s": pd.Series([], dtype=np.int64),
-        "c": pd.Series([], dtype=np.int64),
-    })
     if len(ex) == 0:
-        return empty
+        return _empty(SOLVE_SCHEMA)
 
     def key(xa, ya):
         return (np.asarray(xa, np.int64) << np.int64(32)) | np.asarray(ya, np.int64)
@@ -475,28 +580,7 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     )
 
     flow = base.copy()
-    indeg = np.zeros(m, dtype=np.int64)
-    np.add.at(indeg, succ[succ >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        fs = succ[frontier]
-        has = fs >= 0
-        tgt = fs[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = flow[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        flow[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == m, "border-edge graph must be acyclic"
+    rounds = _kahn(succ, flow, "border-edge graph")
 
     # mosaic terminal per edge: dead -> its own src; pit entry -> the
     # entry's local terminal; crossing -> terminal of the successor
@@ -563,59 +647,36 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     return pd.concat(out, ignore_index=True)
 
 
-def _weighted_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame,
-                   kernel=None) -> pd.DataFrame:
+def _weights(strips: pd.DataFrame, h: int, w: int) -> np.ndarray:
+    """Owned-box cell weights: 1 plus the side='d' inflow deltas."""
+    weights = np.ones((h - 1, w - 1), dtype=np.int64)
+    d = strips[strips["side"] == "d"]
+    if len(d):
+        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
+    return weights
+
+
+def _weighted_pass(tile: _Tile, strips: pd.DataFrame, kernel) -> pd.DataFrame:
     """Stage-4 cogroup body: weighted local pass (weights 1 + delta
     rows riding the strip frame as side='d') -> CELLS_SCHEMA rows in
     global coordinates. The solved edge-terminal map rides the same
     frame as side='t' rows, so whole-mosaic outlets resolve HERE with
     one searchsorted over the tile's own exit edges — no raster-sized
     join downstream."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "z": pd.Series([], dtype=np.int32),
-            "acc": pd.Series([], dtype=np.int64),
-            "outlet_gx": pd.Series([], dtype=np.int64),
-            "outlet_gy": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
+    grid = tile.grid
     h, w = grid.shape
-    weights = np.ones((h - 1, w - 1), dtype=np.int64)
-    d = strips[strips["side"] == "d"]
-    if len(d):
-        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
-    if kernel is None:
-        arrays = mosaic_tile_arrays(_assemble_aug(grid, strips), weights)
-    else:
-        arrays = kernel(grid, strips, weights)
-    ys, xs, acc, term, _cross, _t_ys, _t_xs, _steps, _ncard, _t = arrays
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    ys, xs, acc, term, *_ = kernel(grid, strips, _weights(strips, h, w))
     # local terminal -> whole-mosaic outlet, where the terminal is an
     # exit-edge source the border solve resolved; pits keep themselves
-    out_gx = gx0 + xs[term].astype(np.int64)
-    out_gy = gy0 + ys[term].astype(np.int64)
+    out_gx = tile.gx0 + xs[term].astype(np.int64)
+    out_gy = tile.gy0 + ys[term].astype(np.int64)
     tmap = strips[strips["side"] == "t"]
     if len(tmap):
-        src_sorted, hi, lo = _unpack_map(tmap, w)
-        tk = ys[term].astype(np.int64) * w + xs[term]
-        pos = np.searchsorted(src_sorted, tk)
-        pos_c = np.clip(pos, 0, len(src_sorted) - 1)
-        ok = src_sorted[pos_c] == tk
-        out_gx = np.where(ok, hi[pos_c], out_gx)
-        out_gy = np.where(ok, lo[pos_c], out_gy)
-    return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "z": grid[ys, xs].astype(np.int32),
-        "acc": acc,
-        "outlet_gx": out_gx,
-        "outlet_gy": out_gy,
-    })
+        ok, hi, lo = _lookup_map(tmap, w, ys[term], xs[term])
+        out_gx = np.where(ok, hi, out_gx)
+        out_gy = np.where(ok, lo, out_gy)
+    return tile.cells(ys, xs, z=grid[ys, xs].astype(np.int32), acc=acc,
+                      outlet_gx=out_gx, outlet_gy=out_gy)
 
 
 def mosaic_flow_accumulation(tiles: DataFrame) -> DataFrame:
@@ -624,48 +685,15 @@ def mosaic_flow_accumulation(tiles: DataFrame) -> DataFrame:
     (gx, gy, z, acc, outlet_gx, outlet_gy) where acc and outlet are
     WHOLE-MOSAIC truths (bit-equal to running the per-tile kernel on
     the assembled mosaic grid — pinned in tests/test_mosaic.py)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()  # drop the previous call's perimeter caches
+    sc = _scope()
     # strips feed BOTH cogroups; perimeter-sized, so caching trades a
     # few MB for a second decode+strip pass over every tile
     strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = sc.hold(
-        border.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-        )
-        .cache()
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    # solved edge -> mosaic outlet, routed back to the OWNER tile in
-    # the strip frame (side='t', val packs the outlet's global coords)
-    # so _weighted_pass resolves outlets in-kernel
-    terms = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("t").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("bx") * F.lit(int(_PACK)) + F.col("by")).alias("val"),
-    )
-    strips2 = strips.unionByName(deltas).unionByName(terms)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(lambda l, r: _weighted_pass(l, r), schema=CELLS_SCHEMA)
-    )
+    # solved per-entry deltas and edge -> mosaic outlet map (val packs
+    # the outlet's global coords) ride back so _weighted_pass resolves
+    # outlets in-kernel
+    return _drainage(tiles, strips, sc, _d8_arrays, (_DELTAS, _OUTLETS),
+                     _weighted_pass, CELLS_SCHEMA)
 
 
 def mosaic_basin_stats(tiles: DataFrame) -> DataFrame:
@@ -687,45 +715,22 @@ STREAM_CELLS_SCHEMA = "gx long, gy long, acc long, tgt_gx long, tgt_gy long"
 MOSAIC_STREAM_SCHEMA = "gx long, gy long, acc long, sorder long"
 
 
-def _stream_pass(
-    tile_pdf: pd.DataFrame, strips: pd.DataFrame, min_acc: int
-) -> pd.DataFrame:
+def _stream_pass(tile: _Tile, strips: pd.DataFrame, kernel,
+                 min_acc: int) -> pd.DataFrame:
     """Cogroup body for mosaic_stream_order: WEIGHTED local pass
     (deltas riding the strip frame as side='d', so acc is the mosaic
     accumulation) -> the tile's owned STREAM cells (acc >= min_acc)
     with their immediate D8 target in global coordinates (-1/-1 at
     terminals). Only the sparse stream skeleton leaves the task."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "acc": pd.Series([], dtype=np.int64),
-            "tgt_gx": pd.Series([], dtype=np.int64),
-            "tgt_gy": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    weights = np.ones((h - 1, w - 1), dtype=np.int64)
-    d = strips[strips["side"] == "d"]
-    if len(d):
-        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
-    ys, xs, acc, _term, cross, t_ys, t_xs, _s, _c, t = mosaic_tile_arrays(aug, weights)
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    h, w = tile.grid.shape
+    ys, xs, acc, _term, cross, t_ys, t_xs, _s, _c, t = kernel(
+        tile.grid, strips, _weights(strips, h, w))
     keep = acc >= min_acc
     has_tgt = (t >= 0) | cross  # live descent target somewhere in the mosaic
-    tgx = np.where(has_tgt, gx0 + t_xs, np.int64(-1))
-    tgy = np.where(has_tgt, gy0 + t_ys, np.int64(-1))
-    return pd.DataFrame({
-        "gx": gx0 + xs[keep].astype(np.int64),
-        "gy": gy0 + ys[keep].astype(np.int64),
-        "acc": acc[keep],
-        "tgt_gx": tgx[keep],
-        "tgt_gy": tgy[keep],
-    })
+    tgx = np.where(has_tgt, tile.gx0 + t_xs, np.int64(-1))
+    tgy = np.where(has_tgt, tile.gy0 + t_ys, np.int64(-1))
+    return tile.cells(ys[keep], xs[keep], acc=acc[keep],
+                      tgt_gx=tgx[keep], tgt_gy=tgy[keep])
 
 
 def solve_stream_order(cells: pd.DataFrame) -> pd.DataFrame:
@@ -738,12 +743,7 @@ def solve_stream_order(cells: pd.DataFrame) -> pd.DataFrame:
     Pure pandas/numpy — ONE executor task."""
     n = len(cells)
     if n == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "acc": pd.Series([], dtype=np.int64),
-            "sorder": pd.Series([], dtype=np.int64),
-        })
+        return _empty(MOSAIC_STREAM_SCHEMA)
     gx = cells["gx"].to_numpy(np.int64)
     gy = cells["gy"].to_numpy(np.int64)
     acc = cells["acc"].to_numpy(np.int64)
@@ -823,79 +823,29 @@ def mosaic_stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
     the documented fallback if a mosaic's skeleton outgrows one
     executor is the same distributed-rounds variant as the border
     solve's). Integer-exact gate surface (counts and orders)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
+    sc = _scope()
     strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = border.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    strips2 = strips.unionByName(deltas)
-    skeleton = (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _stream_pass(l, r, min_acc),
-            schema=STREAM_CELLS_SCHEMA,
-        )
-    )
-    return skeleton.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_stream_order(pdf), schema=MOSAIC_STREAM_SCHEMA
-    )
+    skeleton = _drainage(tiles, strips, sc, _d8_arrays, (_DELTAS,),
+                         _stream_pass, STREAM_CELLS_SCHEMA, min_acc)
+    return _one_task(skeleton, solve_stream_order, MOSAIC_STREAM_SCHEMA)
 
 
-def _length_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
+def _length_pass(tile: _Tile, strips: pd.DataFrame, kernel) -> pd.DataFrame:
     """Cogroup body for mosaic_flow_length: unweighted local pass ->
     per-owned-cell WHOLE-MOSAIC path split. The solved per-edge
     downstream splits ride the strip frame as side='u' rows
     (val = (d_steps<<32)|d_card keyed by the edge src's local coords),
     so total = local split + the terminal edge's downstream split
     resolves HERE — no raster-sized join downstream."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "steps": pd.Series([], dtype=np.int64),
-            "n_card": pd.Series([], dtype=np.int64),
-            "n_diag": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    ys, xs, _acc, term, _cross, _t_ys, _t_xs, steps, ncard, _t = mosaic_tile_arrays(aug)
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    ys, xs, _acc, term, _cross, _t_ys, _t_xs, steps, ncard, _t = kernel(
+        tile.grid, strips)
     umap = strips[strips["side"] == "u"]
     if len(umap):
-        src_sorted, d_steps, d_card = _unpack_map(umap, w)
-        tk = ys[term].astype(np.int64) * w + xs[term]
-        pos = np.searchsorted(src_sorted, tk)
-        pos_c = np.clip(pos, 0, len(src_sorted) - 1)
-        ok = src_sorted[pos_c] == tk
-        steps = steps + np.where(ok, d_steps[pos_c], 0)
-        ncard = ncard + np.where(ok, d_card[pos_c], 0)
-    return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "steps": steps,
-        "n_card": ncard,
-        "n_diag": steps - ncard,
-    })
+        ok, d_steps, d_card = _lookup_map(
+            umap, tile.grid.shape[1], ys[term], xs[term])
+        steps = steps + np.where(ok, d_steps, 0)
+        ncard = ncard + np.where(ok, d_card, 0)
+    return tile.cells(ys, xs, steps=steps, n_card=ncard, n_diag=steps - ncard)
 
 
 def mosaic_flow_length(tiles: DataFrame) -> DataFrame:
@@ -919,32 +869,10 @@ def mosaic_flow_length(tiles: DataFrame) -> DataFrame:
     edge map stay perimeter-sized). Integer-exact gate surface:
     steps/n_card/n_diag are counts; the metric length
     n_card + sqrt(2)*n_diag never enters a hashed column."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
+    sc = _scope()
     strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = border.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-    )
-    edge_len = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("u").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("s") * F.lit(int(_PACK)) + F.col("c")).alias("val"),
-    )
-    strips2 = strips.unionByName(edge_len)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(lambda l, r: _length_pass(l, r), schema=LEN_CELLS_SCHEMA)
-    )
+    return _drainage(tiles, strips, sc, _d8_arrays, (_EDGE_LENGTHS,),
+                     _length_pass, LEN_CELLS_SCHEMA)
 
 
 # -------------------------------------------------- seam-correct stencils
@@ -956,7 +884,7 @@ MOSAIC_TERRAIN_SCHEMA = (
 )
 
 
-def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
+def _terrain_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body: halo-augmented grid -> the full first- AND
     second-order stencil surface over the tile's OWNED cells, in global
     coordinates. Pure reuse: ``terrain.horn_grid`` / ``terrain.
@@ -967,17 +895,7 @@ def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
     whole-mosaic grid (pinned in tests/test_mosaic.py)."""
     from .terrain import aspect_octant, horn_grid, morph_grid
 
-    cols = {
-        "gx": np.int64, "gy": np.int64, "z": np.int32, "ndx": np.int64,
-        "ndy": np.int64, "slope_q": np.int64, "aspect_oct": np.int32,
-        "tpi8": np.int64, "tri": np.int64, "rough": np.int64,
-        "zxx": np.int64, "zyy": np.int64, "ixy4": np.int64,
-    }
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({k: pd.Series([], dtype=d) for k, d in cols.items()})
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
+    grid = tile.grid
     h, w = grid.shape
     aug = _assemble_aug(grid, strips)
     ys, xs, ndx, ndy = horn_grid(aug)
@@ -989,31 +907,28 @@ def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
     lx = xs - 1
     keep = (lx < w - 1) & (ly < h - 1)  # ownership: shared border cells
     ly, lx = ly[keep], lx[keep]         # belong to the tile at x=0/y=0
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
     ndx, ndy = ndx[keep], ndy[keep]
-    return pd.DataFrame({
-        "gx": gx0 + lx.astype(np.int64),
-        "gy": gy0 + ly.astype(np.int64),
-        "z": grid[ly, lx].astype(np.int32),
-        "ndx": ndx,
-        "ndy": ndy,
-        "slope_q": ndx * ndx + ndy * ndy,
-        "aspect_oct": aspect_octant(ndx, ndy),
-        "tpi8": tpi8[keep],
-        "tri": tri[keep],
-        "rough": rough[keep],
-        "zxx": zxx[keep],
-        "zyy": zyy[keep],
-        "ixy4": ixy4[keep],
-    })
+    return tile.cells(
+        ly, lx,
+        z=grid[ly, lx].astype(np.int32),
+        ndx=ndx,
+        ndy=ndy,
+        slope_q=ndx * ndx + ndy * ndy,
+        aspect_oct=aspect_octant(ndx, ndy),
+        tpi8=tpi8[keep],
+        tri=tri[keep],
+        rough=rough[keep],
+        zxx=zxx[keep],
+        zyy=zyy[keep],
+        ixy4=ixy4[keep],
+    )
 
 
 MOSAIC_HILLSHADE_SCHEMA = "gx long, gy long, shade int"
 
 
 def _hillshade_pass(
-    tile_pdf: pd.DataFrame,
+    tile: _Tile,
     strips: pd.DataFrame,
     azimuth_deg: float,
     altitude_deg: float,
@@ -1026,30 +941,15 @@ def _hillshade_pass(
     cross-seam 3x3 neighborhood."""
     from .terrain import hillshade_grid, horn_grid
 
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "shade": pd.Series([], dtype=np.int32),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
+    h, w = tile.grid.shape
+    aug = _assemble_aug(tile.grid, strips)
     ys, xs, _ndx, _ndy = horn_grid(aug)  # valid cells, aug frame
     shade = hillshade_grid(aug, azimuth_deg, altitude_deg, z_factor)
     ly = ys - 1  # aug frame -> local tile frame; shade's interior
     lx = xs - 1  # render is indexed by the same local coords
     keep = (lx < w - 1) & (ly < h - 1)
     ly, lx = ly[keep], lx[keep]
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    return pd.DataFrame({
-        "gx": gx0 + lx.astype(np.int64),
-        "gy": gy0 + ly.astype(np.int64),
-        "shade": shade[ly, lx].astype(np.int32),
-    })
+    return tile.cells(ly, lx, shade=shade[ly, lx].astype(np.int32))
 
 
 def mosaic_hillshade_cells(
@@ -1071,17 +971,8 @@ def mosaic_hillshade_cells(
     quantized integer (0..255); the trig stays inside the kernel,
     re-derived per-cell with math-module trig over the assembled
     whole-mosaic grid by the golden twin (tools/make_golden.py)."""
-    strips = halo_strips(tiles)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _hillshade_pass(
-                l, r, azimuth_deg, altitude_deg, z_factor
-            ),
-            schema=MOSAIC_HILLSHADE_SCHEMA,
-        )
-    )
+    return _cogroup(tiles, halo_strips(tiles), _hillshade_pass,
+                    MOSAIC_HILLSHADE_SCHEMA, azimuth_deg, altitude_deg, z_factor)
 
 
 def mosaic_terrain_cells(tiles: DataFrame) -> DataFrame:
@@ -1104,13 +995,8 @@ def mosaic_terrain_cells(tiles: DataFrame) -> DataFrame:
     bucketing at 100 TB); the stencil pass itself stays one narrow
     Arrow kernel per tile with no Exchange downstream. Integer-exact
     gate surface throughout (same discipline as the per-tile ops)."""
-    strips = halo_strips(tiles)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _terrain_pass(l, r),
-                       schema=MOSAIC_TERRAIN_SCHEMA)
-    )
+    return _cogroup(tiles, halo_strips(tiles), _terrain_pass,
+                    MOSAIC_TERRAIN_SCHEMA)
 
 
 # ------------------------------------------------- mosaic depression fill
@@ -1123,73 +1009,30 @@ MOSAIC_FILL_SCHEMA = "gx long, gy long, z int, zfill int"
 FILL_WALL = 32767
 
 
-def _fill_W(tile_pdf: pd.DataFrame, strips: pd.DataFrame):
-    """Decode one tile, assemble the halo-augmented grid whose RING
-    carries the current round's neighbor-W estimates (absent ring =
-    NOVALUE = mosaic edge drains), and fill it. Ring cells sit on the
-    aug boundary, so fill_grid's own seed rule (< 8 valid neighbors)
-    makes them seeds at exactly the estimate values — the per-tile
-    exact solve of the block-Jacobi iteration, zero kernel changes."""
+def _fill_W(tile: _Tile, strips: pd.DataFrame) -> np.ndarray:
+    """Fill one tile's halo-augmented grid whose RING carries the
+    neighbor-W values (absent ring = NOVALUE = mosaic edge drains) ->
+    the owned-plane (h, w) view. Ring cells sit on the aug boundary,
+    so fill_grid's own seed rule (< 8 valid neighbors) makes them
+    seeds at exactly the ring values — the per-tile exact solve, zero
+    kernel changes."""
     from .terrain import fill_grid
 
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    aug = _assemble_aug(grid, strips)
-    W = fill_grid(aug)
-    return img, lat, lon, grid, W[1:-1, 1:-1]  # owned-plane view (h, w)
+    return fill_grid(_assemble_aug(tile.grid, strips))[1:-1, 1:-1]
 
 
-def _fill_strips_pass(tile_pdf: pd.DataFrame,
-                      strips: pd.DataFrame) -> pd.DataFrame:
-    """Cogroup body for one halo round: per-tile fill -> the NEW
-    outgoing W strips (same geometry as halo_strips: the SECOND
-    row/column in from each shared edge, in the RECEIVER's frame)."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "image_id": pd.Series([], dtype=object),
-            "side": pd.Series([], dtype=object),
-            "pos": pd.Series([], dtype=np.int32),
-            "pos2": pd.Series([], dtype=np.int32),
-            "val": pd.Series([], dtype=np.int64),
-        })
-    _img, lat, lon, grid, W = _fill_W(tile_pdf, strips)
-    h, w = grid.shape
-    k = parse_tile_id(tile_pdf["image_id"].iloc[0])[2]
-    emits = (
-        ("s", 1, 0, W[1, :], np.arange(w)),
-        ("n", -1, 0, W[h - 2, :], np.arange(w)),
-        ("e", 0, -1, W[:, 1], np.arange(h)),
-        ("w", 0, 1, W[:, w - 2], np.arange(h)),
-        ("se", 1, -1, W[1:2, 1], np.zeros(1, np.int64)),
-        ("sw", 1, 1, W[1:2, w - 2], np.zeros(1, np.int64)),
-        ("ne", -1, -1, W[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-        ("nw", -1, 1, W[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-    )
-    out = []
-    for side, dlat, dlon, vals, pos in emits:
-        out.append(pd.DataFrame({
-            "image_id": tile_id(lat + dlat, lon + dlon, k),
-            "side": side,
-            "pos": pos.astype(np.int32),
-            "pos2": np.zeros(len(pos), dtype=np.int32),
-            "val": np.asarray(vals, dtype=np.int64),
-        }))
-    return pd.concat(out, ignore_index=True)
+def _fill_strips_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
+    """Cogroup body for one Jacobi halo round: per-tile fill -> the NEW
+    outgoing W strips (the halo_strips geometry, in the RECEIVER's
+    frame)."""
+    return _halo_rows(tile.img, _fill_W(tile, strips))
 
 
-def _fill_cells_pass(tile_pdf: pd.DataFrame,
-                     strips: pd.DataFrame) -> pd.DataFrame:
+def _fill_cells_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Final cogroup body: per-tile fill with the CONVERGED ring ->
     owned valid cells in global coordinates."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "z": pd.Series([], dtype=np.int32),
-            "zfill": pd.Series([], dtype=np.int32),
-        })
-    _img, lat, lon, grid, W = _fill_W(tile_pdf, strips)
+    grid = tile.grid
+    W = _fill_W(tile, strips)
     h, w = grid.shape
     ys, xs = np.nonzero(grid != NOVALUE)
     # Ownership, fill edition: the drainage family's cut (x < w-1,
@@ -1217,14 +1060,8 @@ def _fill_cells_pass(tile_pdf: pd.DataFrame,
     assert (zf < FILL_WALL).all(), (
         "mosaic_fill: WALL leaked past the fixpoint (elevation >= 32767?)"
     )
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "z": grid[ys, xs].astype(np.int32),
-        "zfill": zf.astype(np.int32),
-    })
+    return tile.cells(ys, xs, z=grid[ys, xs].astype(np.int32),
+                      zfill=zf.astype(np.int32))
 
 
 # --------------------- single-solve fill (Barnes 2016 shape, r9) ----------
@@ -1343,35 +1180,19 @@ def _fill_profile_events_py(g, valid, seed, band):
     return events
 
 
-def _fill_profile_pass(tile_pdf: pd.DataFrame,
-                       strips: pd.DataFrame) -> pd.DataFrame:
+def _fill_profile_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body of the ONE profile pass: decode the tile, build the
     z-ringed aug, emit (a) its border-band dendrogram events with node
     keys in GLOBAL coordinates — shared border cells of neighboring
     tiles get the SAME key, which is exactly how the per-tile trees
     join into the mosaic graph — and (b) one destination row per strip
     slot the converged-Jacobi iteration would have emitted (same
-    receiver/side/pos enumeration as _fill_strips_pass), carrying the
+    receiver/side/pos enumeration, _receivers), carrying the
     slot's cell key so the solver can write the strip values itself."""
-    cols = ("kind", "img", "side", "pos", "ka", "kb", "lam")
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "kind": pd.Series([], dtype=object),
-            "img": pd.Series([], dtype=object),
-            "side": pd.Series([], dtype=object),
-            "pos": pd.Series([], dtype=np.int32),
-            "ka": pd.Series([], dtype=np.int64),
-            "kb": pd.Series([], dtype=np.int64),
-            "lam": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
+    grid = tile.grid
     h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    events = fill_profile_events(aug)
-    gx0 = np.int64(cell_gx(lon, 0, w))
-    gy0 = np.int64(cell_gy(lat, 0, h))
+    events = fill_profile_events(_assemble_aug(grid, strips))
+    gx0, gy0 = np.int64(tile.gx0), np.int64(tile.gy0)
 
     def key(lin: np.ndarray) -> np.ndarray:
         out = np.asarray(lin, dtype=np.int64)
@@ -1388,37 +1209,20 @@ def _fill_profile_pass(tile_pdf: pd.DataFrame,
         eb = np.array([e[1] for e in events], dtype=np.int64)
         el = np.array([e[2] for e in events], dtype=np.int64)
         frames.append(pd.DataFrame({
-            "kind": "e", "img": img, "side": "",
+            "kind": "e", "img": tile.img, "side": "",
             "pos": np.zeros(len(ea), dtype=np.int32),
             "ka": key(ea), "kb": key(eb), "lam": el,
         }))
-    gi = grid.astype(np.int64)
-    emits = (
-        ("s", 1, 0, np.full(w, 1), np.arange(w)),
-        ("n", -1, 0, np.full(w, h - 2), np.arange(w)),
-        ("e", 0, -1, np.arange(h), np.full(h, 1)),
-        ("w", 0, 1, np.arange(h), np.full(h, w - 2)),
-        ("se", 1, -1, np.array([1]), np.array([1])),
-        ("sw", 1, 1, np.array([1]), np.array([w - 2])),
-        ("ne", -1, -1, np.array([h - 2]), np.array([1])),
-        ("nw", -1, 1, np.array([h - 2]), np.array([w - 2])),
-    )
-    for side, dlat, dlon, ys_, xs_ in emits:
+    gi = grid.astype(np.int64).ravel()
+    for side, dlat, dlon, ys_, xs_, pos in _receivers(h, w):
         lin = ys_.astype(np.int64) * w + xs_.astype(np.int64)
-        ka = np.where(gi.ravel()[lin] == NOVALUE, np.int64(_K_NOVALUE),
-                      key(lin))
-        if side in ("e", "w"):
-            pos = ys_
-        elif side in ("s", "n"):
-            pos = xs_
-        else:
-            pos = np.zeros(1, dtype=np.int64)
+        ka = np.where(gi[lin] == NOVALUE, np.int64(_K_NOVALUE), key(lin))
         frames.append(pd.DataFrame({
-            "kind": "d", "img": tile_id(lat + dlat, lon + dlon, k),
+            "kind": "d", "img": tile_id(tile.lat + dlat, tile.lon + dlon, tile.k),
             "side": side, "pos": pos.astype(np.int32),
             "ka": ka, "kb": np.int64(0), "lam": np.int64(0),
         }))
-    return pd.concat(frames, ignore_index=True)[list(cols)]
+    return pd.concat(frames, ignore_index=True)
 
 
 def solve_fill_border(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1483,70 +1287,40 @@ def _solved_fill_strips(tiles: DataFrame, sc) -> DataFrame:
     `sc`); the iterated path stays as the mechanism-independent twin,
     equality pinned in tests/test_mosaic.py."""
     zstrips = sc.hold(halo_strips(tiles).cache())
-    prof = (
-        tiles.groupby("image_id")
-        .cogroup(zstrips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _fill_profile_pass(l, r), schema=PROFILE_SCHEMA
-        )
-    )
-    strips = (
-        prof.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_fill_border(pdf), schema=STRIP_SCHEMA
-        )
-    )
-    return sc.hold(strips.cache())
+    prof = _cogroup(tiles, zstrips, _fill_profile_pass, PROFILE_SCHEMA)
+    return sc.hold(_one_task(prof, solve_fill_border, STRIP_SCHEMA).cache())
 
 
-def mosaic_fill(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
+def mosaic_fill(tiles: DataFrame) -> DataFrame:
     """PRODUCTION mosaic-scale depression filling: tiles (input_hint
     schema) -> per-owned-valid-cell (gx, gy, z, zfill) where zfill is
     the WHOLE-MOSAIC Priority-Flood surface (bit-equal to fill_grid on
     the assembled mosaic — pinned in tests/test_mosaic.py, including
     bowls that straddle seams).
 
-    Distributed shape — block-Jacobi with exact per-tile solves
-    (the fill analogue of Barnes 2016's tiled decomposition, iterated
-    instead of border-solved because fill state is a full border
-    PROFILE, not a functional graph):
-     1. round 1 treats every interior seam as an impassable-high WALL
-        (ring = 32767 at existing neighbors, NOVALUE where the mosaic
-        ends) — an upper bound on the true boundary values;
-     2. each round cogroups (tiles x current W strips), runs the
-        UNCHANGED per-tile fill kernel on the halo-augmented grid
-        (the ring is seed row by fill_grid's own < 8-valid-neighbors
-        rule), and emits fresh perimeter W strips;
-     3. the iteration is monotone DECREASING from an upper bound, so
-        it converges to the greatest fixpoint of the global minimax
-        equation — the true mosaic fill (same argument as the numpy
-        reconstruction-by-erosion oracle, one level up); convergence
-        is detected by an order-free checksum aggregate over the
-        strips (one tiny Spark job per round, never a driver collect
-        of the strips themselves);
-     4. a final cogroup emits owned cells.
+    Distributed shape — the Barnes 2016 single border solve
+    (_solved_fill_strips):
+     1. one profile cogroup: each tile, given its z halo ring, emits
+        its border-band minimax dendrogram (fill_profile_events,
+        O(perimeter) events keyed by global cell, so shared border
+        cells join the per-tile trees) plus one destination row per
+        outgoing strip slot;
+     2. ONE bounded task (solve_fill_border) runs minimax-Dijkstra
+        from the mosaic drain over the union of all events and writes
+        the converged W strips directly;
+     3. a final cogroup runs the UNCHANGED per-tile fill kernel on the
+        W-ringed augmented grid (the ring seeds by fill_grid's own
+        < 8-valid-neighbors rule) and emits owned cells.
 
-    Rounds needed = how many tiles the deepest cross-seam depression
-    spans (+1): information crosses one seam per round. Gate mosaics
-    converge in ~3; a planet mosaic's worst chain is the longest
-    low-relief corridor, bounded by max_rounds (RAISES rather than
-    silently capping). Per round the raster is decoded and filled once
-    per tile (C heap: ~2.3 s/SRTM-1 tile) and only perimeter-sized
-    strips shuffle — the Barnes single-solve variant (border minimax
-    profiles + one global solve) is the documented next step if round
-    count ever dominates."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
-    strips = _solved_fill_strips(tiles, sc)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _fill_cells_pass(l, r), schema=MOSAIC_FILL_SCHEMA
-        )
-    )
+    Only perimeter-sized rows shuffle, and the job count does not
+    depend on how many tiles a depression spans. The block-Jacobi halo
+    iteration this replaced (_converged_fill_strips: seams start as an
+    impassable WALL and relax one seam per round to the greatest
+    fixpoint) stays as the mechanism-independent twin; the two strip
+    frames are pinned equal in tests/test_mosaic.py."""
+    sc = _scope()
+    return _cogroup(tiles, _solved_fill_strips(tiles, sc), _fill_cells_pass,
+                    MOSAIC_FILL_SCHEMA)
 
 
 def _strip_checksum(df: DataFrame):
@@ -1559,9 +1333,12 @@ def _strip_checksum(df: DataFrame):
 
 
 def _converged_fill_strips(tiles: DataFrame, sc, max_rounds: int) -> DataFrame:
-    """The mosaic_fill halo iteration, exposed: returns the CONVERGED
-    perimeter W strips (cached in `sc`). mosaic_routed_flow reuses
-    them as the boundary condition for the filled surface."""
+    """The block-Jacobi fill halo iteration, the test twin of
+    _solved_fill_strips: returns the CONVERGED perimeter W strips
+    (cached in `sc`). Round 1 treats every interior seam as an
+    impassable-high WALL; each round refills every tile with the
+    current W ring and emits fresh strips; the monotone-decreasing
+    iteration stops when an order-free strip checksum repeats."""
     zstrips = sc.hold(halo_strips(tiles).cache())
     strips = zstrips.select(
         "image_id", "side", "pos", "pos2",
@@ -1571,14 +1348,8 @@ def _converged_fill_strips(tiles: DataFrame, sc, max_rounds: int) -> DataFrame:
     prev = None
     for _round in range(max_rounds):
         strips = sc.hold(strips.cache())
-        nxt = (
-            tiles.groupby("image_id")
-            .cogroup(strips.groupby("image_id"))
-            .applyInPandas(
-                lambda l, r: _fill_strips_pass(l, r), schema=STRIP_SCHEMA
-            )
-        )
-        nxt = sc.hold(nxt.cache())
+        nxt = sc.hold(
+            _cogroup(tiles, strips, _fill_strips_pass, STRIP_SCHEMA).cache())
         chk = _strip_checksum(nxt)
         if chk == prev:
             return strips
@@ -1594,9 +1365,6 @@ def _converged_fill_strips(tiles: DataFrame, sc, max_rounds: int) -> DataFrame:
 #: unreachable-flat sentinel for the cross-seam BFS iteration (int64,
 #: far above any real hop count; strips carry it verbatim)
 DIST_INF = np.int64(1) << np.int64(40)
-
-_QSIDES = {"qn": "n", "qs": "s", "qe": "e", "qw": "w",
-           "qne": "ne", "qnw": "nw", "qse": "se", "qsw": "sw"}
 
 
 def _routed_core(grid: np.ndarray, strips: pd.DataFrame):
@@ -1633,48 +1401,16 @@ def _routed_core(grid: np.ndarray, strips: pd.DataFrame):
         tgt_x[sel] += dx
         tgt_y[sel] += dy
 
-    # ring distances from the q strips (aug boundary positions)
-    ring = np.zeros((ha, wa), dtype=bool)
+    # ring distances from the q strips (aug boundary positions); a
+    # ring position without a q strip yet (round 1) stays +inf, which
+    # is exactly right: equal-W adjacency through it only helps once
+    # its distance arrives
     rdist = np.full((ha, wa), DIST_INF, dtype=np.int64)
-    h, w = ha - 2, wa - 2
-    for side, g in strips.groupby("side"):
-        if side not in _QSIDES:
-            continue
-        pos = g["pos"].to_numpy()
-        val = g["val"].to_numpy(np.int64)
-        base = _QSIDES[side]
-        if base == "n":
-            ring[0, 1 + pos] = True
-            rdist[0, 1 + pos] = val
-        elif base == "s":
-            ring[h + 1, 1 + pos] = True
-            rdist[h + 1, 1 + pos] = val
-        elif base == "w":
-            ring[1 + pos, 0] = True
-            rdist[1 + pos, 0] = val
-        elif base == "e":
-            ring[1 + pos, w + 1] = True
-            rdist[1 + pos, w + 1] = val
-        elif base == "nw":
-            ring[0, 0] = True
-            rdist[0, 0] = val[0]
-        elif base == "ne":
-            ring[0, w + 1] = True
-            rdist[0, w + 1] = val[0]
-        elif base == "sw":
-            ring[h + 1, 0] = True
-            rdist[h + 1, 0] = val[0]
-        elif base == "se":
-            ring[h + 1, w + 1] = True
-            rdist[h + 1, w + 1] = val[0]
-    # a ring position exists as a BFS participant even without a q
-    # strip yet (round 1): equal-W adjacency through it only helps once
-    # its distance arrives, so absent == +inf is exactly right
-    ring |= np.zeros_like(ring)
+    _place_ring(rdist, strips, "q")
 
     dplane = np.full((ha, wa), DIST_INF, dtype=np.int64)
     dplane[univ & (d8p > 0)] = 0
-    np.minimum(dplane, np.where(ring, rdist, DIST_INF), out=dplane)
+    np.minimum(dplane, rdist, out=dplane)
     flat = univ & (d8p == 0)
     # min-plus relaxation to the LOCAL fixpoint: rounds <= local flat
     # diameter; candidates flow through universe cells and ring cells
@@ -1746,114 +1482,24 @@ def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
     # compact owned universe (row-major), tile coords — the
     # mosaic_tile_arrays contract
     uy, ux = np.nonzero(univ)
-    ty_ = uy - 1
-    tx_ = ux - 1
-    own = (tx_ < w - 1) & (ty_ < h - 1)
-    uy, ux, ty_, tx_ = uy[own], ux[own], ty_[own], tx_[own]
-    n = len(uy)
-    ys_out = ty_.astype(np.int32)
-    xs_out = tx_.astype(np.int32)
-    t_ys = tgt_y[uy, ux] - 1
-    t_xs = tgt_x[uy, ux] - 1
-    htg = has_tgt[uy, ux]
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ty_ * w + tx_] = np.arange(n)
-    in_box = (
-        htg
-        & (t_xs >= 0) & (t_xs < w - 1)
-        & (t_ys >= 0) & (t_ys < h - 1)
-    )
-    t = np.full(n, -1, dtype=np.int64)
-    safe_idx = np.where(in_box, t_ys * w + t_xs, 0)
-    t[in_box] = lookup[safe_idx[in_box]]
-    cross = htg & ~in_box
+    own = (ux - 1 < w - 1) & (uy - 1 < h - 1)
+    uy, ux = uy[own], ux[own]
+    live = has_tgt[uy, ux]
     # unrouted terminals keep own coords as target coords (the
     # mosaic_tile_arrays convention for pits)
-    t_ys = np.where(htg, t_ys, ty_)
-    t_xs = np.where(htg, t_xs, tx_)
-
-    if weights is None:
-        acc = np.ones(n, dtype=np.int64)
-    else:
-        acc = weights[ty_, tx_].astype(np.int64).copy()
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "routed mosaic graph must be acyclic"
-    term = np.arange(n, dtype=np.int64)
-    steps = np.zeros(n, dtype=np.int64)
-    ncard = np.zeros(n, dtype=np.int64)
-    is_card = ((t_xs == tx_) | (t_ys == ty_)).astype(np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        idx = frontier[has_t]
-        term[idx] = term[ft[has_t]]
-        steps[idx] = steps[ft[has_t]] + 1
-        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
-    return (ys_out, xs_out, acc, term, cross, t_ys, t_xs,
-            steps, ncard, t)
+    t_ys = np.where(live, tgt_y[uy, ux], uy) - 1
+    t_xs = np.where(live, tgt_x[uy, ux], ux) - 1
+    return _owned_graph((uy - 1).astype(np.int32), (ux - 1).astype(np.int32),
+                        t_ys, t_xs, live, h, w, weights, "routed mosaic graph")
 
 
-def _dist_strips_pass(tile_pdf: pd.DataFrame,
-                      strips: pd.DataFrame) -> pd.DataFrame:
+def _dist_strips_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body for one flat-distance halo round: per-tile BFS
     relaxation (given the converged W ring + current q-dist ring) ->
     fresh outgoing q strips (the dist at the SECOND row/column in from
     each shared edge — the halo_strips geometry, q-prefixed)."""
-    empty = pd.DataFrame({
-        "image_id": pd.Series([], dtype=object),
-        "side": pd.Series([], dtype=object),
-        "pos": pd.Series([], dtype=np.int32),
-        "pos2": pd.Series([], dtype=np.int32),
-        "val": pd.Series([], dtype=np.int64),
-    })
-    if len(tile_pdf) == 0:
-        return empty
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    _augW, _univ, _d8p, _ty, _tx, dplane = _routed_core(grid, strips)
-    d = dplane[1:-1, 1:-1]  # tile-coords view
-    h, w = grid.shape
-    emits = (
-        ("qs", 1, 0, d[1, :], np.arange(w)),
-        ("qn", -1, 0, d[h - 2, :], np.arange(w)),
-        ("qe", 0, -1, d[:, 1], np.arange(h)),
-        ("qw", 0, 1, d[:, w - 2], np.arange(h)),
-        ("qse", 1, -1, d[1:2, 1], np.zeros(1, np.int64)),
-        ("qsw", 1, 1, d[1:2, w - 2], np.zeros(1, np.int64)),
-        ("qne", -1, -1, d[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-        ("qnw", -1, 1, d[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-    )
-    out = []
-    for side, dlat, dlon, vals, pos in emits:
-        out.append(pd.DataFrame({
-            "image_id": tile_id(lat + dlat, lon + dlon, k),
-            "side": side,
-            "pos": pos.astype(np.int32),
-            "pos2": np.zeros(len(pos), dtype=np.int32),
-            "val": np.asarray(vals, dtype=np.int64),
-        }))
-    return pd.concat(out, ignore_index=True)
+    dplane = _routed_core(tile.grid, strips)[-1]
+    return _halo_rows(tile.img, dplane[1:-1, 1:-1], "q")
 
 
 def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -1865,14 +1511,15 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     drainage must CROSS the seam after conditioning).
 
     Three exchange stages, all perimeter-sized:
-     1. the mosaic_fill halo iteration (converged W strips — the
-        boundary condition under which every tile reproduces its slice
-        of the mosaic-filled surface locally);
+     1. the mosaic_fill single border solve (_solved_fill_strips: one
+        profile cogroup + one minimax-Dijkstra task -> the converged W
+        strips, the boundary condition under which every tile
+        reproduces its slice of the mosaic-filled surface locally);
      2. a flat-distance halo iteration (q strips): per-tile min-plus
         BFS relaxation seeded by local draining cells and the ring
         distances — monotone decreasing from +inf, so it converges to
         the global BFS fixpoint in (seam crossings of the longest
-        shortest-flat-path) rounds;
+        shortest-flat-path) rounds, at most max_rounds;
      3. the drainage decomposition (border pass -> ONE-task border
         solve -> weighted relabel), running on the ROUTED graph: the
         border machinery is unchanged because routed flat edges are
@@ -1883,71 +1530,24 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     Cost: each halo round decodes + fills every tile once; the routed
     kernel is the numpy body (no C twin yet — gate-scale; documented
     next step if this enters a hot path)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
+    sc = _scope()
     wstrips = _solved_fill_strips(tiles, sc)
     cur = wstrips
     prev = None
-    qconv = None
     for _round in range(max_rounds):
-        qnxt = (
-            tiles.groupby("image_id")
-            .cogroup(cur.groupby("image_id"))
-            .applyInPandas(
-                lambda l, r: _dist_strips_pass(l, r), schema=STRIP_SCHEMA
-            )
-        )
-        qnxt = sc.hold(qnxt.cache())
+        qnxt = sc.hold(
+            _cogroup(tiles, cur, _dist_strips_pass, STRIP_SCHEMA).cache())
         chk = _strip_checksum(qnxt)
         if chk == prev:
-            qconv = qnxt
             break
         prev = chk
         cur = wstrips.unionByName(qnxt)
-    if qconv is None:
+    else:
         raise RuntimeError(
             f"mosaic_routed_flow dist iteration did not converge "
             f"in {max_rounds} rounds"
         )
-    base = sc.hold(wstrips.unionByName(qconv).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(base.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _border_pass(l, r, kernel=_routed_arrays),
-            schema=BORDER_SCHEMA,
-        )
-    )
-    solved = sc.hold(
-        border.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-        )
-        .cache()
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    terms = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("t").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("bx") * F.lit(int(_PACK)) + F.col("by")).alias("val"),
-    )
-    strips2 = base.unionByName(deltas).unionByName(terms)
-    cells = (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _weighted_pass(l, r, kernel=_routed_arrays),
-            schema=CELLS_SCHEMA,
-        )
-    )
+    base = sc.hold(wstrips.unionByName(qnxt).cache())
+    cells = _drainage(tiles, base, sc, _routed_arrays, (_DELTAS, _OUTLETS),
+                      _weighted_pass, CELLS_SCHEMA)
     return cells.select("gx", "gy", "acc", "outlet_gx", "outlet_gy")
