@@ -460,9 +460,7 @@ def q_zorder_layout(spark, sf_dir):
     bit arithmetic. The layout op itself (repartitionByRange + sort)
     is exercised and footprint-asserted in tests/test_spatial.py."""
     pts = _li_points(spark, sf_dir)
-    cpd = float(2**CELL_RES)
-    ix = F.floor((F.col("lon") + F.lit(180.0)) * F.lit(cpd)).cast("long")
-    iy = F.floor((F.col("lat") + F.lit(90.0)) * F.lit(cpd)).cast("long")
+    ix, iy = spatial._grid_xy(F.col("lat"), F.col("lon"), CELL_RES)
     keyed = pts.withColumn("zkey", spatial.zorder_key(ix, iy, bits=16))
     return keyed.groupBy(F.shiftright("zkey", 8).alias("zbucket")).agg(
         F.count("*").alias("n"),
@@ -2146,24 +2144,8 @@ def q_tile_pip_flagship(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering: the external driver gate evaluates only the FIRST
-    # 50 entries of this dict (VERDICT r2 finding #2). Round-8 rotation
-    # (VERDICT r7 "Next round" #4), final composition after the late-r8
-    # waves: the 5 always-in core entries, SEVENTEEN r8-born operators
-    # (in-window from day one per the standing policy: the six
-    # cross-tile drainage/stencil ops, subword tokenizer pair,
-    # hillshade, morphometry, flow_length, stream_order, then the
-    # hydrology-conditioning waves - fill_sinks, filled_flow,
-    # flat_routed_flow, mosaic_fill, mosaic_routed_flow), the ELEVEN
-    # r1-r4-stale rows named by the verdict (the only entries whose
-    # last driver check predated r5), and 17 of the r6-green rows.
-    # After the r8 driver run no registry entry's last driver check
-    # predates r6 (rows past the boundary are r6-green pure-builtins
-    # plus freshly-r7-green operators). Everything past the boundary
-    # stays value-checked every round by tools/check_entry.py (the gate
-    # mirror, 117/117 this round) + tests/.
     return {
-        # ---- r8 driver window (first 50; see rotation note above) ----
+        # ---- r8 driver window (first 50) ----
         # engine core: the 5 always-in entries (flagship + spatial + ingestion + lineage)
         "tile_pip_flagship": q_tile_pip_flagship,
         "knn_join": q_knn_join,

@@ -36,7 +36,15 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     """Hash-repartition ``df`` to the session's default parallelism when
     its file-source backing has fewer files than cores; no-op otherwise
     (including for non-file sources, which already chose a parallelism
-    at creation). ``key_cols``: the row-key column(s) to hash on."""
+    at creation). ``key_cols``: the row-key column(s) to hash on.
+
+    Cost: ``df.inputFiles()`` lists the input files EAGERLY, on the
+    driver at plan time: every call materializes the full file list of
+    each file-source relation in the plan (through its file index,
+    listing the storage if the index has not cached it) before any job
+    runs, even when the answer is a no-op — nothing for the gate's few
+    files, O(files) driver work and memory at the ~10^5-file scale
+    above."""
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     try:

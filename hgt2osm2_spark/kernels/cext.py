@@ -29,7 +29,7 @@ def build_lib(name: str, source: str) -> ctypes.CDLL:
         os.makedirs(so_dir, exist_ok=True)
         # build INSIDE so_dir so the final os.replace is a same-filesystem
         # atomic rename (a /tmp tempdir raises EXDEV on tmpfs hosts, which
-        # available() would swallow and silently disable every C path)
+        # would disable every C path)
         with tempfile.TemporaryDirectory(dir=so_dir) as td:
             src = os.path.join(td, f"{name}.c")
             with open(src, "w") as f:
@@ -47,3 +47,40 @@ def build_lib(name: str, source: str) -> ctypes.CDLL:
 
 def disabled() -> bool:
     return bool(os.environ.get("HGT2OSM2_NO_CKERNEL"))
+
+
+#: name -> the bound library, or None after a failed build (per process)
+_libs: dict[str, "ctypes.CDLL | None"] = {}
+#: name -> why the library failed to build or bind
+_errors: dict[str, str] = {}
+
+
+def load(name: str, source: str, bind) -> "ctypes.CDLL | None":
+    """The C kernel `name`, built from `source` and passed through
+    `bind(lib)` (argtypes/restypes) on first use; None when the opt-out
+    is set or the build failed. Either outcome is cached for the
+    process, a failure together with its error text (see load_error),
+    so a missing compiler is reported, not only slower."""
+    if disabled():
+        return None
+    if name not in _libs:
+        try:
+            lib = build_lib(name, source)
+            bind(lib)
+        except (OSError, subprocess.SubprocessError, AttributeError) as ex:
+            # no compiler / failed compile / unloadable .so / missing
+            # symbol: fall back to the Python twin, keep the reason
+            lib = None
+            detail = getattr(ex, "stderr", None)
+            if isinstance(detail, bytes):
+                detail = detail.decode(errors="replace")
+            _errors[name] = f"{type(ex).__name__}: {ex}" + (
+                f"\n{detail.strip()}" if detail else "")
+        _libs[name] = lib
+    return _libs[name]
+
+
+def load_error(name: str) -> str | None:
+    """Why C kernel `name` failed to load, or None (loaded, untried,
+    or disabled by the opt-out)."""
+    return _errors.get(name)

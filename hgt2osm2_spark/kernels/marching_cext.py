@@ -205,32 +205,24 @@ int64_t march(
 }
 """
 
-_lib = None
-_tried = False
+def _bind(lib) -> None:
+    f64p = ctypes.POINTER(ctypes.c_double)
+    i32p = ctypes.POINTER(ctypes.c_int32)
+    lib.march.argtypes = [
+        f64p, ctypes.c_int32, ctypes.c_int32,
+        ctypes.c_int32, ctypes.c_double,
+        ctypes.c_int32, ctypes.c_int32, ctypes.c_int32,
+        i32p, i32p, f64p, f64p, f64p, f64p, ctypes.c_int64,
+    ]
+    lib.march.restype = ctypes.c_int64
+
+
+def _lib():
+    return cext.load("marching", _C_SOURCE, _bind)
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("marching", _C_SOURCE)
-        f64p = ctypes.POINTER(ctypes.c_double)
-        i32p = ctypes.POINTER(ctypes.c_int32)
-        lib.march.argtypes = [
-            f64p, ctypes.c_int32, ctypes.c_int32,
-            ctypes.c_int32, ctypes.c_double,
-            ctypes.c_int32, ctypes.c_int32, ctypes.c_int32,
-            i32p, i32p, f64p, f64p, f64p, f64p, ctypes.c_int64,
-        ]
-        lib.march.restype = ctypes.c_int64
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def run(P: np.ndarray, d: int, fake: float, c0: int, c1: int, yb: int,
@@ -252,7 +244,7 @@ def run(P: np.ndarray, d: int, fake: float, c0: int, c1: int, yb: int,
         oy1 = np.empty(cap, np.float64)
         ox2 = np.empty(cap, np.float64)
         oy2 = np.empty(cap, np.float64)
-        n = _lib.march(
+        n = _lib().march(
             P.ctypes.data_as(f64p), H, W, int(d), float(fake),
             int(c0), int(c1), int(yb),
             oy.ctypes.data_as(i32p), olv.ctypes.data_as(i32p),

@@ -188,34 +188,26 @@ int post_batch(
 }
 """
 
-_lib = None
-_tried = False
+def _bind(lib) -> None:
+    f64p = ctypes.POINTER(ctypes.c_double)
+    i64p = ctypes.POINTER(ctypes.c_int64)
+    lib.post_batch.argtypes = [
+        ctypes.c_int64, i64p, f64p, f64p,
+        ctypes.c_int32, ctypes.c_double, f64p,
+        ctypes.c_double, ctypes.c_int,
+        f64p, f64p, i64p,
+        ctypes.POINTER(ctypes.c_int8), ctypes.POINTER(ctypes.c_int32),
+        ctypes.POINTER(ctypes.c_int32),
+    ]
+    lib.post_batch.restype = ctypes.c_int
+
+
+def _lib():
+    return cext.load("postproc", _C_SOURCE, _bind)
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("postproc", _C_SOURCE)
-        f64p = ctypes.POINTER(ctypes.c_double)
-        i64p = ctypes.POINTER(ctypes.c_int64)
-        lib.post_batch.argtypes = [
-            ctypes.c_int64, i64p, f64p, f64p,
-            ctypes.c_int32, ctypes.c_double, f64p,
-            ctypes.c_double, ctypes.c_int,
-            f64p, f64p, i64p,
-            ctypes.POINTER(ctypes.c_int8), ctypes.POINTER(ctypes.c_int32),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.post_batch.restype = ctypes.c_int
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def run(xs: np.ndarray, ys: np.ndarray, off: np.ndarray, minpt: int,
@@ -240,7 +232,7 @@ def run(xs: np.ndarray, ys: np.ndarray, off: np.ndarray, minpt: int,
     n_dp = np.empty(n_poly, dtype=np.int32)
     f64p = ctypes.POINTER(ctypes.c_double)
     i64p = ctypes.POINTER(ctypes.c_int64)
-    rc = _lib.post_batch(
+    rc = _lib().post_batch(
         n_poly, off.ctypes.data_as(i64p),
         xs.ctypes.data_as(f64p), ys.ctypes.data_as(f64p),
         int(minpt), float(minbox), edges.ctypes.data_as(f64p),

@@ -376,12 +376,7 @@ done:
 }
 """
 
-_lib = None
-_tried = False
-
-
-def _build() -> "ctypes.CDLL | None":
-    lib = cext.build_lib("stitch", _C_SOURCE)
+def _bind(lib) -> None:
     i32p = ctypes.POINTER(ctypes.c_int32)
     lib.stitch_tile_c.argtypes = [
         ctypes.c_int32, i32p, i32p, i32p, i32p, ctypes.c_int32,
@@ -389,21 +384,14 @@ def _build() -> "ctypes.CDLL | None":
         ctypes.POINTER(ctypes.c_int64),
     ]
     lib.stitch_tile_c.restype = ctypes.c_int
-    return lib
+
+
+def _lib():
+    return cext.load("stitch", _C_SOURCE, _bind)
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        _lib = _build()
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def run(seg_y: np.ndarray, seg_lv: np.ndarray, p1: np.ndarray,
@@ -429,7 +417,7 @@ def run(seg_y: np.ndarray, seg_lv: np.ndarray, p1: np.ndarray,
     def p(a):
         return a.ctypes.data_as(i32p)
 
-    rc = _lib.stitch_tile_c(
+    rc = _lib().stitch_tile_c(
         n, p(y_s), p(lv_s), p(p1_s), p(p2_s), int(n_pts),
         p(out_pts), out_pts.size, p(out_off), out_off.size,
         p(out_lv), out_lv.size,

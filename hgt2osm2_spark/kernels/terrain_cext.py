@@ -894,33 +894,24 @@ int64_t fill_profile_c(const int16_t* g, int64_t h, int64_t w,
 }
 """
 
-_lib = None
-_tried = False
+_ENTRY_POINTS = (
+    "d8_grid_c", "flow_accumulate_c", "mosaic_accumulate_c", "fill_c",
+    "routed_flow_c", "flow_length_c", "stream_order_c", "morph_c",
+    "viewshed_c", "fill_profile_c",
+)
+
+
+def _bind(lib) -> None:
+    for fn in _ENTRY_POINTS:
+        getattr(lib, fn).restype = ctypes.c_int64
+
+
+def _lib():
+    return cext.load("terrain", _C_SOURCE, _bind)
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("terrain", _C_SOURCE)
-        lib.d8_grid_c.restype = ctypes.c_int64
-        lib.flow_accumulate_c.restype = ctypes.c_int64
-        lib.mosaic_accumulate_c.restype = ctypes.c_int64
-        lib.fill_c.restype = ctypes.c_int64
-        lib.routed_flow_c.restype = ctypes.c_int64
-        lib.flow_length_c.restype = ctypes.c_int64
-        lib.stream_order_c.restype = ctypes.c_int64
-        lib.morph_c.restype = ctypes.c_int64
-        lib.viewshed_c.restype = ctypes.c_int64
-        lib.fill_profile_c.restype = ctypes.c_int64
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _lib() is not None
 
 
 def _as_i16(grid: np.ndarray) -> np.ndarray | None:
@@ -956,8 +947,8 @@ def d8(grid: np.ndarray):
     xs = np.empty(cap, np.int32)
     d8o = np.empty(cap, np.int32)
     dr = np.empty(cap, np.int64)
-    n = _lib.d8_grid_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                       _ptr(ys), _ptr(xs), _ptr(d8o), _ptr(dr))
+    n = _lib().d8_grid_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                         _ptr(ys), _ptr(xs), _ptr(d8o), _ptr(dr))
     if n < 0:
         return None
     return ys[:n].copy(), xs[:n].copy(), d8o[:n].copy(), dr[:n].copy()
@@ -981,9 +972,9 @@ def flow_accumulate(grid: np.ndarray):
     acc = np.empty(cap, np.int64)
     oy = np.empty(cap, np.int32)
     ox = np.empty(cap, np.int32)
-    n = _lib.flow_accumulate_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                               _ptr(ys), _ptr(xs), _ptr(acc),
-                               _ptr(oy), _ptr(ox))
+    n = _lib().flow_accumulate_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                                 _ptr(ys), _ptr(xs), _ptr(acc),
+                                 _ptr(oy), _ptr(ox))
     if n < 0:
         return None
     return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
@@ -1023,7 +1014,7 @@ def mosaic_accumulate(aug: np.ndarray, weights: np.ndarray | None = None):
     steps = np.empty(cap, np.int64)
     ncard = np.empty(cap, np.int64)
     t = np.empty(cap, np.int64)
-    n = _lib.mosaic_accumulate_c(
+    n = _lib().mosaic_accumulate_c(
         _ptr(g), ctypes.c_int64(ha), ctypes.c_int64(wa),
         _ptr(wts), ctypes.c_int64(has_w),
         _ptr(ys), _ptr(xs), _ptr(acc), _ptr(term), _ptr(cross),
@@ -1048,7 +1039,7 @@ def fill(grid: np.ndarray):
     out = np.empty((h, w), np.int64)
     if h == 0 or w == 0:
         return out
-    n = _lib.fill_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w), _ptr(out))
+    n = _lib().fill_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w), _ptr(out))
     if n < 0:
         return None
     return out
@@ -1075,7 +1066,7 @@ def fill_profile(g: np.ndarray, seed: np.ndarray, band: np.ndarray):
     ev_l = np.empty(cap, np.int64)
     s8 = np.ascontiguousarray(seed.astype(np.uint8))
     b8 = np.ascontiguousarray(band.astype(np.uint8))
-    n = _lib.fill_profile_c(
+    n = _lib().fill_profile_c(
         _ptr(g16), ctypes.c_int64(h), ctypes.c_int64(w),
         _ptr(s8), _ptr(b8), _ptr(ev_a), _ptr(ev_b), _ptr(ev_l))
     if n < 0:
@@ -1101,9 +1092,9 @@ def routed_flow(filled: np.ndarray):
     acc = np.empty(cap, np.int64)
     oy = np.empty(cap, np.int32)
     ox = np.empty(cap, np.int32)
-    n = _lib.routed_flow_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                           _ptr(ys), _ptr(xs), _ptr(acc),
-                           _ptr(oy), _ptr(ox))
+    n = _lib().routed_flow_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                             _ptr(ys), _ptr(xs), _ptr(acc),
+                             _ptr(oy), _ptr(ox))
     if n < 0:
         return None
     return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
@@ -1127,8 +1118,8 @@ def flow_length(grid: np.ndarray):
     xs = np.empty(cap, np.int32)
     steps = np.empty(cap, np.int64)
     ncard = np.empty(cap, np.int64)
-    n = _lib.flow_length_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                           _ptr(ys), _ptr(xs), _ptr(steps), _ptr(ncard))
+    n = _lib().flow_length_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                             _ptr(ys), _ptr(xs), _ptr(steps), _ptr(ncard))
     if n < 0:
         return None
     steps, ncard = steps[:n].copy(), ncard[:n].copy()
@@ -1152,9 +1143,9 @@ def stream_order(grid: np.ndarray, min_acc: int):
     xs = np.empty(cap, np.int32)
     acc = np.empty(cap, np.int64)
     order = np.empty(cap, np.int64)
-    n = _lib.stream_order_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                            ctypes.c_int64(int(min_acc)),
-                            _ptr(ys), _ptr(xs), _ptr(acc), _ptr(order))
+    n = _lib().stream_order_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                              ctypes.c_int64(int(min_acc)),
+                              _ptr(ys), _ptr(xs), _ptr(acc), _ptr(order))
     if n < 0:
         return None
     return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
@@ -1178,8 +1169,8 @@ def morph(grid: np.ndarray):
     ys = np.empty(cap, np.int32)
     xs = np.empty(cap, np.int32)
     outs = [np.empty(cap, np.int64) for _ in range(6)]
-    n = _lib.morph_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                     _ptr(ys), _ptr(xs), *[_ptr(o) for o in outs])
+    n = _lib().morph_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                       _ptr(ys), _ptr(xs), *[_ptr(o) for o in outs])
     if n < 0:
         return None
     return (ys[:n].copy(), xs[:n].copy(), *[o[:n].copy() for o in outs])
@@ -1198,10 +1189,10 @@ def viewshed(grid: np.ndarray, oy: int, ox: int,
     vis = np.zeros((h, w), np.uint8)
     if h == 0 or w == 0:
         return vis.astype(bool)
-    n = _lib.viewshed_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                        ctypes.c_int64(int(oy)), ctypes.c_int64(int(ox)),
-                        ctypes.c_int64(int(h_obs)),
-                        ctypes.c_int64(int(radius)), _ptr(vis))
+    n = _lib().viewshed_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
+                          ctypes.c_int64(int(oy)), ctypes.c_int64(int(ox)),
+                          ctypes.c_int64(int(h_obs)),
+                          ctypes.c_int64(int(radius)), _ptr(vis))
     if n < 0:
         return vis.astype(bool)  # bad observer: all-False, same as numpy
     return vis.astype(bool)

@@ -31,6 +31,7 @@ from ..cache import scope as _cache_scope
 
 from ..config import ContourOptions
 from ..kernels import codecs, marching, postprocess, stitch
+from ..sources.decode import map_tiles
 
 SEGMENTS_SCHEMA = T.StructType(
     [
@@ -74,28 +75,23 @@ def extract_contour_segments(tiles: DataFrame, opt: ContourOptions | None = None
     (seg_ord). Decode happens inside the same Arrow batch as the kernel."""
     opt = opt or ContourOptions()
     d, fake = opt.minor_distance, opt.fake_distance
+    return map_tiles(tiles, SEGMENTS_SCHEMA, lambda img, grid: _segment_cols(
+        img, marching.extract_segments(grid, d, fake)))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                seg = marching.extract_segments(grid, d, fake)
-                n = len(seg)
-                if n == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.repeat(img, n),
-                        "level": seg["level"].astype(np.int32),
-                        "row_y": seg["y"].astype(np.int32),
-                        "seg_ord": np.arange(n, dtype=np.int32),
-                        "x1": seg["x1"],
-                        "y1": seg["y1"],
-                        "x2": seg["x2"],
-                        "y2": seg["y2"],
-                    }
-                )
 
-    return tiles.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
+def _segment_cols(img, seg) -> dict:
+    """SEGMENTS_SCHEMA columns of one tile's (or band's) segments, in
+    emission order."""
+    return {
+        "image_id": img,
+        "level": seg["level"].astype(np.int32),
+        "row_y": seg["y"].astype(np.int32),
+        "seg_ord": np.arange(len(seg), dtype=np.int32),
+        "x1": seg["x1"],
+        "y1": seg["y1"],
+        "x2": seg["x2"],
+        "y2": seg["y2"],
+    }
 
 
 BANDS_SCHEMA = T.StructType(
@@ -122,28 +118,21 @@ def split_tile_bands(tiles: DataFrame, opt: ContourOptions | None = None,
     3601² SRTM-1 tile otherwise serializes on a single 50s task."""
     K = max(int(band_rows), 1)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                gh, gw = grid.shape
-                gb = grid[::-1]  # SW-origin rows
-                ny = gh - 1
-                for bi, lo in enumerate(range(0, max(ny, 0), K)):
-                    hi = min(lo + K, ny)
-                    a, b = max(lo - 1, 0), min(hi + 2, gh)
-                    band_ns = np.ascontiguousarray(gb[a:b][::-1]).astype("<i2")
-                    rows.append({
-                        "image_id": img, "band": bi, "y_base": a,
-                        "cell_lo": lo - a, "cell_hi": hi - a,
-                        "bw": gw, "bh": b - a,
-                        "payload": band_ns.tobytes(),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in BANDS_SCHEMA.fields])
+    def bands(img, grid):
+        gh, gw = grid.shape
+        gb = grid[::-1]  # SW-origin rows
+        ny = gh - 1
+        lo = np.arange(0, max(ny, 0), K)
+        hi = np.minimum(lo + K, ny)
+        a, b = np.maximum(lo - 1, 0), np.minimum(hi + 2, gh)
+        return {
+            "image_id": img, "band": np.arange(len(lo)), "y_base": a,
+            "cell_lo": lo - a, "cell_hi": hi - a, "bw": gw, "bh": b - a,
+            "payload": [np.ascontiguousarray(gb[i:j][::-1]).astype("<i2").tobytes()
+                        for i, j in zip(a, b)],
+        }
 
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=BANDS_SCHEMA
-    )
+    return map_tiles(tiles, BANDS_SCHEMA, bands)
 
 
 def extract_contour_segments_banded(
@@ -178,21 +167,8 @@ def extract_contour_segments_banded(
                     grid, d, fake,
                     cell_lo=int(c_lo), cell_hi=int(c_hi), y_base=int(y_base),
                 )
-                n = len(seg)
-                if n == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.repeat(img, n),
-                        "level": seg["level"].astype(np.int32),
-                        "row_y": seg["y"].astype(np.int32),
-                        "seg_ord": np.arange(n, dtype=np.int32),
-                        "x1": seg["x1"],
-                        "y1": seg["y1"],
-                        "x2": seg["x2"],
-                        "y2": seg["y2"],
-                    }
-                )
+                if len(seg):
+                    yield pd.DataFrame(_segment_cols(img, seg))
 
     return bands.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
 

@@ -79,6 +79,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import codecs
+from ..sources.decode import map_tiles
 from .terrain import D8_NEIGHBORS, d8_grid
 
 NOVALUE = int(codecs.NOVALUE)
@@ -469,17 +470,7 @@ def halo_strips(tiles: DataFrame) -> DataFrame:
     """Every tile -> 8 perimeter strips addressed to its neighbors
     (STRIP_SCHEMA rows; the raster itself never leaves the task). The
     strip geometry is _receivers'."""
-    from typing import Iterator
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [_halo_rows(img, grid)
-                   for img, grid in codecs.iter_decoded_tiles(pdf)]
-            yield pd.concat(out, ignore_index=True) if out else _empty(STRIP_SCHEMA)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=STRIP_SCHEMA
-    )
+    return map_tiles(tiles, STRIP_SCHEMA, _halo_rows)
 
 
 def _border_pass(tile: _Tile, strips: pd.DataFrame, kernel) -> pd.DataFrame:
@@ -1502,7 +1493,12 @@ def _dist_strips_pass(tile: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     return _halo_rows(tile.img, dplane[1:-1, 1:-1], "q")
 
 
-def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
+#: Bound on mosaic_routed_flow's flat-distance halo rounds: one round
+#: per seam crossing of the longest shortest-flat-path.
+_ROUTED_MAX_ROUNDS = 64
+
+
+def mosaic_routed_flow(tiles: DataFrame) -> DataFrame:
     """PRODUCTION whole-mosaic CONDITIONED drainage: fill (cross-tile
     priority-flood) + flat routing (cross-seam Garbrecht-Martz) +
     accumulation — per-owned-cell (gx, gy, acc, outlet_gx, outlet_gy)
@@ -1519,7 +1515,7 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
         BFS relaxation seeded by local draining cells and the ring
         distances — monotone decreasing from +inf, so it converges to
         the global BFS fixpoint in (seam crossings of the longest
-        shortest-flat-path) rounds, at most max_rounds;
+        shortest-flat-path) rounds, at most _ROUTED_MAX_ROUNDS;
      3. the drainage decomposition (border pass -> ONE-task border
         solve -> weighted relabel), running on the ROUTED graph: the
         border machinery is unchanged because routed flat edges are
@@ -1534,7 +1530,7 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     wstrips = _solved_fill_strips(tiles, sc)
     cur = wstrips
     prev = None
-    for _round in range(max_rounds):
+    for _round in range(_ROUTED_MAX_ROUNDS):
         qnxt = sc.hold(
             _cogroup(tiles, cur, _dist_strips_pass, STRIP_SCHEMA).cache())
         chk = _strip_checksum(qnxt)
@@ -1545,7 +1541,7 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     else:
         raise RuntimeError(
             f"mosaic_routed_flow dist iteration did not converge "
-            f"in {max_rounds} rounds"
+            f"in {_ROUTED_MAX_ROUNDS} rounds"
         )
     base = sc.hold(wstrips.unionByName(qnxt).cache())
     cells = _drainage(tiles, base, sc, _routed_arrays, (_DELTAS, _OUTLETS),

@@ -33,35 +33,26 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import codecs
+from ..sources.decode import map_tiles
 
 
 def explode_cells(tiles: DataFrame) -> DataFrame:
     """tiles (input_hint schema) -> per-cell rows
     (image_id, x, y, value) via one Arrow decode pass."""
-    from typing import Iterator
+    return map_tiles(tiles, "image_id string, x int, y int, value int",
+                     lambda img, grid: {"image_id": img, **grid_cells(grid)})
 
-    import numpy as np
-    import pandas as pd
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                gh, gw = grid.shape
-                ys, xs = np.mgrid[0:gh, 0:gw]
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs.ravel().astype(np.int32),
-                    "y": ys.ravel().astype(np.int32),
-                    "value": grid.ravel().astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-                {"image_id": [], "x": [], "y": [], "value": []}
-            )
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema="image_id string, x int, y int, value int"
-    )
+def grid_cells(grid: np.ndarray) -> dict:
+    """Every cell of a (h, w) grid as flat row-major int32 columns
+    x, y, value."""
+    gh, gw = grid.shape
+    ys, xs = np.mgrid[0:gh, 0:gw]
+    return {
+        "x": xs.ravel().astype(np.int32),
+        "y": ys.ravel().astype(np.int32),
+        "value": grid.ravel().astype(np.int32),
+    }
 
 
 def pyramid_level_up(cells: DataFrame) -> DataFrame:
@@ -119,32 +110,22 @@ def pyramid_cells(tiles: DataFrame, levels: int) -> DataFrame:
     build_pyramid(explode_cells(tiles), levels)."""
     if levels < 1:
         raise ValueError(f"pyramid_cells: levels must be >= 1, got {levels}")
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        per_level = []
+        for _ in range(levels):
+            grid = halve_grid(grid)
+            per_level.append(grid_cells(grid))
+        return {
+            "level": np.repeat(np.arange(1, levels + 1, dtype=np.int32),
+                               [len(c["x"]) for c in per_level]),
+            "image_id": img,
+            **{k: np.concatenate([c[k] for c in per_level])
+               for k in ("x", "y", "value")},
+        }
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                for lvl in range(1, levels + 1):
-                    grid = halve_grid(grid)
-                    gh, gw = grid.shape
-                    ys, xs = np.mgrid[0:gh, 0:gw]
-                    parts.append(pd.DataFrame({
-                        "level": np.int32(lvl),
-                        "image_id": img,
-                        "x": xs.ravel().astype(np.int32),
-                        "y": ys.ravel().astype(np.int32),
-                        "value": grid.ravel().astype(np.int32),
-                    }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-                {"level": [], "image_id": [], "x": [], "y": [], "value": []}
-            )
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema="level int, image_id string, x int, y int, value int"
-    )
+    return map_tiles(
+        tiles, "level int, image_id string, x int, y int, value int", cells)
 
 
 def build_pyramid(cells: DataFrame, levels: int) -> DataFrame:

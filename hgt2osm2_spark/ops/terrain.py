@@ -47,6 +47,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..kernels import codecs
+from ..sources.decode import map_tiles
 
 #: aspect_oct sector conditions, in CASE/np.select order: first match
 #: wins; sectors are half-open [k*45, (k+1)*45) from +x through +y.
@@ -104,41 +105,17 @@ TERRAIN_SCHEMA = (
 def terrain_cells(tiles: DataFrame) -> DataFrame:
     """PRODUCTION terrain derivatives: tiles (input_hint schema) ->
     per-interior-cell Horn rows, one narrow Arrow pass, no Exchange."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, ndx, ndy = horn_grid(grid)
+        return {
+            "image_id": img, "x": xs, "y": ys, "ndx": ndx, "ndy": ndy,
+            "slope_q": ndx * ndx + ndy * ndy,
+            "dzdx": ndx / 8.0, "dzdy": ndy / 8.0,
+            "aspect_oct": aspect_octant(ndx, ndy),
+        }
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, ndx, ndy = horn_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs,
-                    "y": ys,
-                    "ndx": ndx,
-                    "ndy": ndy,
-                    "slope_q": ndx * ndx + ndy * ndy,
-                    "dzdx": ndx / 8.0,
-                    "dzdy": ndy / 8.0,
-                    "aspect_oct": aspect_octant(ndx, ndy),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "ndx": pd.Series([], dtype=np.int64),
-                "ndy": pd.Series([], dtype=np.int64),
-                "slope_q": pd.Series([], dtype=np.int64),
-                "dzdx": pd.Series([], dtype=np.float64),
-                "dzdy": pd.Series([], dtype=np.float64),
-                "aspect_oct": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=TERRAIN_SCHEMA
-    )
+    return map_tiles(tiles, TERRAIN_SCHEMA, cells)
 
 
 #: D8 neighbors in ESRI code order (E, SE, S, SW, W, NW, N, NE) as
@@ -294,6 +271,15 @@ FLOWACC_SCHEMA = (
 )
 
 
+def _flowacc_cols(img, surface, kernel):
+    """FLOWACC_SCHEMA columns of one tile from a drainage kernel."""
+    ys, xs, acc, oy, ox = kernel(surface)
+    return {
+        "image_id": img, "x": xs, "y": ys, "acc": acc,
+        "outlet_x": ox.astype(np.int32), "outlet_y": oy.astype(np.int32),
+    }
+
+
 def flow_accumulation(tiles: DataFrame) -> DataFrame:
     """PRODUCTION flow accumulation + watershed outlet: tiles
     (input_hint schema) -> per-valid-cell (upstream-area count,
@@ -302,32 +288,8 @@ def flow_accumulation(tiles: DataFrame) -> DataFrame:
     pass with no Exchange — the iterative graph propagation runs
     inside the kernel in vectorized topological rounds, never as
     driver-side Spark iterations."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, acc, oy, ox = flow_accumulate_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return map_tiles(tiles, FLOWACC_SCHEMA,
+                     lambda img, grid: _flowacc_cols(img, grid, flow_accumulate_grid))
 
 
 BASIN_CELLS_SCHEMA = (
@@ -340,33 +302,13 @@ def basin_cells(tiles: DataFrame) -> DataFrame:
     (cell, its elevation, the outlet cell it drains to). The upstream
     half of basin_stats — kept separate so other consumers (stream
     extraction, basin joins) can reuse the labeled frame."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        cols = _flowacc_cols(img, grid, flow_accumulate_grid)
+        cols["z"] = grid[cols["y"], cols["x"]].astype(np.int32)
+        return cols
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, _, oy, ox = flow_accumulate_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "z": grid[ys, xs].astype(np.int32),
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "z": pd.Series([], dtype=np.int32),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=BASIN_CELLS_SCHEMA
-    )
+    return map_tiles(tiles, BASIN_CELLS_SCHEMA, cells)
 
 
 def basin_stats(tiles: DataFrame) -> DataFrame:
@@ -399,30 +341,12 @@ def flow_direction(tiles: DataFrame) -> DataFrame:
     labeling, stream extraction all consume this grid). Same scale
     shape as terrain_cells: ONE narrow Arrow decode pass, numpy
     shifted-slice comparisons, no Exchange."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, d8, drop2x = d8_grid(grid)
+        return {"image_id": img, "x": xs, "y": ys, "d8": d8, "drop2x": drop2x}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, d8, drop2x = d8_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "d8": d8, "drop2x": drop2x,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "d8": pd.Series([], dtype=np.int32),
-                "drop2x": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=D8_SCHEMA
-    )
+    return map_tiles(tiles, D8_SCHEMA, cells)
 
 
 HILLSHADE_SCHEMA = "image_id string, x int, y int, shade int"
@@ -442,34 +366,14 @@ def hillshade_cells(
     kernel, bit-pinned against the pure-Python scalar twin
     (tests/test_terrain_text.py) and re-derived per-cell with
     math-module trig by the golden twin (tools/make_golden.py)."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, _ndx, _ndy = horn_grid(grid)
+        shade = hillshade_grid(grid, azimuth_deg, altitude_deg, z_factor)
+        return {"image_id": img, "x": xs, "y": ys,
+                "shade": shade[ys - 1, xs - 1].astype(np.int32)}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, _ndx, _ndy = horn_grid(grid)
-                shade = hillshade_grid(
-                    grid, azimuth_deg, altitude_deg, z_factor
-                )
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs,
-                    "y": ys,
-                    "shade": shade[ys - 1, xs - 1].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "shade": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=HILLSHADE_SCHEMA
-    )
+    return map_tiles(tiles, HILLSHADE_SCHEMA, cells)
 
 
 def hillshade_grid(
@@ -588,35 +492,13 @@ def morphometry_cells(tiles: DataFrame) -> DataFrame:
     rows — the terrain_cells scale shape: ONE narrow Arrow decode
     pass, numpy shifted-slice sums, no Exchange, integer-exact gate
     surface."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, tpi8, tri, rough, zxx, zyy, ixy4 = morph_grid(grid)
+        return {"image_id": img, "x": xs, "y": ys, "tpi8": tpi8, "tri": tri,
+                "rough": rough, "zxx": zxx, "zyy": zyy, "ixy4": ixy4}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, tpi8, tri, rough, zxx, zyy, ixy4 = morph_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "tpi8": tpi8,
-                    "tri": tri, "rough": rough, "zxx": zxx, "zyy": zyy,
-                    "ixy4": ixy4,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "tpi8": pd.Series([], dtype=np.int64),
-                "tri": pd.Series([], dtype=np.int64),
-                "rough": pd.Series([], dtype=np.int64),
-                "zxx": pd.Series([], dtype=np.int64),
-                "zyy": pd.Series([], dtype=np.int64),
-                "ixy4": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=MORPH_SCHEMA
-    )
+    return map_tiles(tiles, MORPH_SCHEMA, cells)
 
 
 #: d8 codes whose step is cardinal (distance 1); the other four are
@@ -696,31 +578,13 @@ def flow_path_length(tiles: DataFrame) -> DataFrame:
     flow_accumulation, so ONE narrow Arrow pass, no Exchange; the
     iterative resolution runs inside the kernel as pointer-doubling
     rounds."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, steps, n_card, n_diag = flow_length_grid(grid)
+        return {"image_id": img, "x": xs, "y": ys, "steps": steps,
+                "n_card": n_card, "n_diag": n_diag}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, steps, n_card, n_diag = flow_length_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "steps": steps,
-                    "n_card": n_card, "n_diag": n_diag,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "steps": pd.Series([], dtype=np.int64),
-                "n_card": pd.Series([], dtype=np.int64),
-                "n_diag": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWLEN_SCHEMA
-    )
+    return map_tiles(tiles, FLOWLEN_SCHEMA, cells)
 
 
 def stream_order_grid(grid: np.ndarray, min_acc: int):
@@ -804,30 +668,12 @@ def stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
     step downstream of flow accumulation. Tile-local: ONE narrow
     Arrow pass, no Exchange; the order merge runs in-kernel as
     worklist-Kahn rounds."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        ys, xs, acc, order = stream_order_grid(grid, min_acc)
+        return {"image_id": img, "x": xs, "y": ys, "acc": acc, "sorder": order}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, acc, order = stream_order_grid(grid, min_acc)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "acc": acc, "sorder": order,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "sorder": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=STREAM_ORDER_SCHEMA
-    )
+    return map_tiles(tiles, STREAM_ORDER_SCHEMA, cells)
 
 
 def fill_grid(grid: np.ndarray) -> np.ndarray:
@@ -910,34 +756,16 @@ def fill_sinks(tiles: DataFrame) -> DataFrame:
     by construction (the seed set IS the tile boundary), so ONE narrow
     Arrow pass, no Exchange — the iterative reconstruction runs
     inside the kernel (C heap pass when available)."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        filled = fill_grid(grid)
+        ys, xs = np.nonzero(grid != codecs.NOVALUE)
+        return {"image_id": img,
+                "x": xs.astype(np.int32), "y": ys.astype(np.int32),
+                "z": grid[ys, xs].astype(np.int32),
+                "zfill": filled[ys, xs].astype(np.int32)}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid)
-                ys, xs = np.nonzero(grid != codecs.NOVALUE)
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs.astype(np.int32),
-                    "y": ys.astype(np.int32),
-                    "z": grid[ys, xs].astype(np.int32),
-                    "zfill": filled[ys, xs].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "z": pd.Series([], dtype=np.int32),
-                "zfill": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FILL_SCHEMA
-    )
+    return map_tiles(tiles, FILL_SCHEMA, cells)
 
 
 def filled_flow_accumulation(tiles: DataFrame) -> DataFrame:
@@ -952,33 +780,8 @@ def filled_flow_accumulation(tiles: DataFrame) -> DataFrame:
     Same one-narrow-Arrow-pass shape as flow_accumulation; zfill
     stays int16-ranged (bounded by the tile's own max z), so the C
     drainage path engages on the filled surface too."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid).astype(np.int16)
-                ys, xs, acc, oy, ox = flow_accumulate_grid(filled)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return map_tiles(tiles, FLOWACC_SCHEMA, lambda img, grid: _flowacc_cols(
+        img, fill_grid(grid).astype(np.int16), flow_accumulate_grid))
 
 
 def routed_flow_grid(filled: np.ndarray):
@@ -1117,33 +920,8 @@ def flat_routed_flow(tiles: DataFrame) -> DataFrame:
     filled_flow keeps flats as terminals; this op is the full
     conditioning a watershed delineation uses). Tile-local: ONE narrow
     Arrow pass, no Exchange."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid).astype(np.int16)
-                ys, xs, acc, oy, ox = routed_flow_grid(filled)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return map_tiles(tiles, FLOWACC_SCHEMA, lambda img, grid: _flowacc_cols(
+        img, fill_grid(grid).astype(np.int16), routed_flow_grid))
 
 
 def viewshed_grid(grid: np.ndarray, oy: int, ox: int,
@@ -1234,37 +1012,18 @@ def viewshed(tiles: DataFrame, oy: int | None = None, ox: int | None = None,
     pass, no Exchange. Dispatches to the C fast path
     (kernels/terrain_cext.viewshed) with this numpy body as oracle +
     fallback."""
-    from typing import Iterator
 
-    import pandas as pd
+    def cells(img, grid):
+        h, w = grid.shape
+        cy = h // 2 if oy is None else oy
+        cx = w // 2 if ox is None else ox
+        vis = viewshed_grid(grid, cy, cx, h_obs, radius)
+        ys, xs = np.nonzero(grid != codecs.NOVALUE)
+        d2 = (ys.astype(np.int64) - cy) ** 2 + (xs.astype(np.int64) - cx) ** 2
+        keep = d2 <= int(radius) * int(radius)
+        ys, xs = ys[keep], xs[keep]
+        return {"image_id": img,
+                "x": xs.astype(np.int32), "y": ys.astype(np.int32),
+                "visible": vis[ys, xs].astype(np.int32)}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                h, w = grid.shape
-                cy = h // 2 if oy is None else oy
-                cx = w // 2 if ox is None else ox
-                vis = viewshed_grid(grid, cy, cx, h_obs, radius)
-                g = grid.astype(np.int64)
-                ys2, xs2 = np.nonzero(g != codecs.NOVALUE)
-                d2 = ((ys2.astype(np.int64) - cy) ** 2
-                      + (xs2.astype(np.int64) - cx) ** 2)
-                keep = d2 <= int(radius) * int(radius)
-                ys2, xs2 = ys2[keep], xs2[keep]
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs2.astype(np.int32),
-                    "y": ys2.astype(np.int32),
-                    "visible": vis[ys2, xs2].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "visible": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=VIEWSHED_SCHEMA
-    )
+    return map_tiles(tiles, VIEWSHED_SCHEMA, cells)

@@ -87,6 +87,37 @@ def decode_grid(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     return codecs.decode(data, fmt, w, h)
 
 
+def map_tiles(tiles: DataFrame, schema, fn) -> DataFrame:
+    """The one tile-local map: decode -> kernel -> emit, in ONE narrow
+    mapInPandas pass over the five input_hint columns it reads
+    (image_id, bytes, w, h, fmt; no Exchange).
+
+    ``fn(image_id, grid)`` returns the tile's output columns — a dict
+    (or DataFrame) keyed by the names of ``schema`` (a DDL string or a
+    StructType), arrays or broadcast scalars. The columns are emitted
+    in schema order and concatenated once per Arrow batch; a batch that
+    produces no rows yields nothing. The raster never leaves the task
+    that decodes it: only the vector rows do."""
+    import pandas as pd
+
+    names = (schema.fieldNames() if isinstance(schema, T.StructType)
+             else [c.split()[0] for c in schema.split(",")])
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            parts = []
+            for img, grid in codecs.iter_decoded_tiles(pdf):
+                cols = fn(img, grid)
+                part = pd.DataFrame({n: cols[n] for n in names})
+                if len(part):
+                    parts.append(part)
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
+        gen, schema=schema)
+
+
 QUARANTINE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType(), False),

@@ -211,3 +211,32 @@ def test_stitch_c_on_adversarial_segment_streams():
         fast = stitch.stitch_tile(seg)
         ref = stitch.stitch_tile_reference(seg)
         assert fast == ref, f"trial {trial}"
+
+
+def test_all_c_kernels_load():
+    """With gcc on PATH and the opt-out unset, every C kernel loads; a
+    kernel that does not fails here with its kept build error instead
+    of silently running the Python twin."""
+    import shutil
+
+    from hgt2osm2_spark.kernels import cext, marching_cext, terrain_cext
+
+    if shutil.which("gcc") is None or cext.disabled():
+        pytest.skip("no gcc on PATH, or HGT2OSM2_NO_CKERNEL set")
+    kernels = {"marching": marching_cext, "stitch": stitch_cext,
+               "postproc": postprocess_cext, "terrain": terrain_cext}
+    failed = {name: cext.load_error(name)
+              for name, mod in kernels.items() if not mod.available()}
+    assert not failed, failed
+
+
+def test_failed_c_build_keeps_its_error():
+    import shutil
+
+    from hgt2osm2_spark.kernels import cext
+
+    if shutil.which("gcc") is None or cext.disabled():
+        pytest.skip("no gcc on PATH, or HGT2OSM2_NO_CKERNEL set")
+    assert cext.load("broken_probe", "int f( {", lambda lib: None) is None
+    err = cext.load_error("broken_probe")
+    assert err.startswith("CalledProcessError") and "error" in err.split("\n", 1)[1]
